@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — driver contract: ONE JSON line
@@ -29,9 +31,11 @@ object Bench {
     val onlyIds = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => onlyIds.forall(_.contains(n)))
-    // warmup: compile every plan + JIT the engine once
+    // warmup: compile every plan + JIT the engine once. Only NonFatal
+    // failures are the query's own; a fatal JVM error (OOM, linkage) ends
+    // the run instead of being timed as a "failed" query.
     names.foreach { n =>
-      try runOne(SparkEntry.queries(n)) catch { case _: Throwable => () }
+      try runOne(SparkEntry.queries(n)) catch { case NonFatal(_) => () }
     }
     // Executor task-time per query (r15, VERDICT r14 #2): at sf0.1 most
     // queries are latency-bound, so WALL barely moves between core counts
@@ -51,7 +55,9 @@ object Bench {
     // engine's actual steady-state cost. A failing query must NOT report
     // its time-to-failure as a cost (a regression that throws early would
     // silently "improve" the total): failures record -1 and a "failed"
-    // list, and are excluded from the total.
+    // list, and are excluded from the total; each failed id's last cause
+    // goes to BENCH_DETAIL.json.
+    val causes = scala.collection.mutable.Map.empty[String, String]
     def pass(): Map[String, (Option[Double], Double)] = names.map { name =>
       // collect predecessors' garbage OUTSIDE the timed section: after ~100
       // query executions in one JVM, allocation-heavy queries otherwise pay
@@ -60,8 +66,9 @@ object Bench {
       val rt0 = metrics.runTimeMs
       val t0 = System.nanoTime()
       val ok = try { runOne(SparkEntry.queries(name)); true } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          causes(name) = e.toString
           false
       }
       val wall = (System.nanoTime() - t0) / 1e9
@@ -112,12 +119,16 @@ object Bench {
       val ttDetail = results.map { case (k, _) =>
         "    \"" + k + "\": " + taskTimes(k)
       }.mkString("{\n", ",\n", "\n  }")
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      val causeDetail = causes.toSeq.sorted.map { case (k, c) =>
+        "    \"" + k + "\": " + json.writeValueAsString(c)
+      }.mkString("{\n", ",\n", "\n  }")
       val detail = results.map { case (k, v) =>
         "  \"" + k + "\": " + v.getOrElse(-1.0)
-      }.mkString(s"""{\n  "at": "${java.time.Instant.now()}",\n  "sf": "$sfDir",\n  "total_s": $total,\n  "failed": $failed,\n  "task_time_sec": $ttDetail,\n""", ",\n", "\n}\n")
+      }.mkString(s"""{\n  "at": "${java.time.Instant.now()}",\n  "sf": "$sfDir",\n  "total_s": $total,\n  "failed": $failed,\n  "failure_causes": $causeDetail,\n  "task_time_sec": $ttDetail,\n""", ",\n", "\n}\n")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$root/BENCH_DETAIL.json"), detail)
-    } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] detail write failed: $e") }
     // tee the full per-query record in-repo (append, one line per run):
     // the driver's bench artifact truncates its tail, which erased the
     // alphabetically-early half of the suite's timing history for rounds
@@ -139,7 +150,7 @@ object Bench {
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
       }
-    } catch { case e: Throwable => System.err.println(s"[bench] tee failed: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] tee failed: $e") }
     spark.stop()
   }
 }

@@ -33,7 +33,9 @@ import org.apache.spark.sql.functions._
   *      directly consumable as fixed-length training sequences
   *
   * Every stage reads the previous stage's LAKE artifact, so a 100 TB run
-  * restarts from the last completed layer; the breaker mirrors the
+  * restarts from the last completed layer. Each layer boundary costs one
+  * Spark job: counters come from the write (`Lake.write`) and readbacks
+  * reuse the written schema (`Lake.read`). The breaker mirrors the
   * reference's quality-gate abort semantics (data_quality_gate.py:101-110)
   * applied to corpus curation.
   */
@@ -58,21 +60,21 @@ object CorpusPipeline {
       compactTargetBytes: Option[Long] = None): Summary = {
     val lake = new Lake(spark, lakeRoot)
 
+    // every layer is one write job whose row count (and, for gold, token
+    // total) is observed on that job — nothing re-counts the lake
     log("step 1/7: raw corpus -> bronze")
-    lake.write(raw, "bronze", "documents")
+    val bronzeRows = lake.write(raw, "bronze", "documents").rows
     val bronze = lake.read("bronze", "documents")
-    val bronzeRows = bronze.count()
 
     log("step 2/7: line cleanup + exact (normalized) + near-dup dedup -> silver")
     // read three times (count, cluster input, keeper anti-join): persist
     val exact = Corpus.exactDedup(Corpus.dedupLines(bronze), normalized = true).persist()
     val afterExact = exact.count()
-    val deduped = Corpus.nearDupDedup(exact)
-    lake.write(deduped, "silver", "deduped")
+    val afterNearDup = lake.write(Corpus.nearDupDedup(exact), "silver", "deduped").rows
     exact.unpersist()
-    val afterNearDup = lake.read("silver", "deduped").count()
 
     log("step 3/7: repetition + entropy quality gate")
+    // the gate's own count trips the breaker before the layer is written
     val (quality, removedByQuality) =
       Corpus.qualityFilter(lake.read("silver", "deduped"),
         maxDupTokenFrac, maxTopBigramFrac, minEntropy)
@@ -90,24 +92,21 @@ object CorpusPipeline {
     lake.write(clean, "silver", "clean")
 
     log("step 5/7: PII redaction")
-    val (redacted, piiDocs) = Corpus.redactPii(lake.read("silver", "clean"))
+    val (redacted, pii) = Corpus.redactPii(lake.read("silver", "clean"))
     lake.write(redacted, "silver", "redacted")
+    val piiDocs = pii.get(Corpus.PiiChanged).asInstanceOf[Long]
 
     log("step 6/7: per-language token budget -> gold training mix")
     val gold = Corpus.tokenBudget(lake.read("silver", "redacted"), langBudget)
-    lake.write(gold, "gold", "training_mix")
-    val goldDf = lake.read("gold", "training_mix")
-    val goldRows = goldDf.count()
-    val goldTokens = {
-      val row = goldDf.agg(sum("ws_tokens")).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }
+    val goldOut = lake.write(gold, "gold", "training_mix",
+      observe = Seq(coalesce(sum("ws_tokens"), lit(0L)).as("tokens")))
+    val goldTokens = goldOut[Long]("tokens")
 
     log("step 7/7: concat-and-chunk packing -> gold training sequences")
     // the q_pack_sequences layout over the CURATED mix (null-text rows
     // carry no tokens and are excluded — a pack is a token run)
     val packed = Corpus.packOffsets(
-      goldDf.filter(col("ws_tokens").isNotNull)
+      lake.read("gold", "training_mix").filter(col("ws_tokens").isNotNull)
         .select(col("doc_id"), col("lang"), col("ws_tokens")))
       .select(col("doc_id"), col("lang"), col("ws_tokens"), col("start_off"),
         expr(s"start_off div $packLen").as("pack_id"),
@@ -133,7 +132,7 @@ object CorpusPipeline {
 
     log("corpus pipeline completed successfully")
     Summary(bronzeRows, afterExact, afterNearDup, removedByQuality,
-      removedByContamination, piiDocs, goldRows, goldTokens, goldPacks)
+      removedByContamination, piiDocs, goldOut.rows, goldTokens, goldPacks)
   }
 
   /** `runMain graft.CorpusPipeline <sfDir> <lakeRoot>` against the driver

@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   * the chain before later layers are touched — the `set -e` of the
   * reference. Each stage reads the previous stage's LAKE artifact (not an
   * in-memory handoff): layers stay independently restartable and
-  * inspectable, exactly how a 100 TB run recovers mid-chain.
+  * inspectable, exactly how a 100 TB run recovers mid-chain. Each layer
+  * boundary costs one Spark job: counters are observed on the write
+  * (`Lake.write`), and readbacks reuse the written schema (`Lake.read`).
   */
 object Pipelines {
 
@@ -46,18 +48,20 @@ object Pipelines {
 
     // 1. Universe — must run first: defines the asset list downstream
     //    backfills are allowed to touch (run_pipelines.sh:29-31).
+    //    Every layer below is one write job; its row count is observed on
+    //    that job, never re-counted from the lake.
     log("step 1/5: universe generation")
     val universe = Universe.universeTable(raw, "date", "coin_id", "close", universeN)
-    lake.write(universe, "universe", "monthly")
-    val universeRows = lake.read("universe", "monthly").count()
+    val universeRows = lake.write(universe, "universe", "monthly").rows
 
     // 2. Bronze layer: the raw history, persisted as-is (historical_data_etl).
     log("step 2/5: historical ETL -> bronze")
-    lake.write(raw, "bronze", "historical")
-    val bronzeRows = lake.read("bronze", "historical").count()
+    val bronzeRows = lake.write(raw, "bronze", "historical").rows
 
     // 3. Canonical merge + quality gate -> silver. The breaker is LIVE:
-    //    a poisoned batch aborts the chain here, gold is never touched.
+    //    the gate's pre-write aggregate trips it on a poisoned batch, so
+    //    the chain aborts here and silver and gold are never touched. The
+    //    silver write also observes the latest day the snapshot needs.
     log("step 3/5: canonical merge + quality gate -> silver")
     val bronze = lake.read("bronze", "historical")
     val canon = Canonical.canonicalize(bronze, mapping, "coin_id", "from_id", "to_id")
@@ -68,8 +72,8 @@ object Pipelines {
     val wRet = Window.partitionBy("canonical_id").orderBy(col("date"), col("coin_id"))
     val silver = gate.cleaned
       .withColumn("returns_1d", (col("close") / lag("close", 1).over(wRet)) - 1.0)
-    lake.write(silver, "silver", "historical")
-    val silverRows = lake.read("silver", "historical").count()
+    val silverOut = lake.write(silver, "silver", "historical",
+      observe = Seq(max(date_format(col("date"), "yyyy-MM-dd")).as("latest")))
     log(f"quality gate: removed ${gate.removed}/${gate.initial} (${gate.lossPct}%.2f%%)")
 
     // 4. Gold features (feature_engineering_pipeline; two shuffle
@@ -78,20 +82,21 @@ object Pipelines {
     val gold = Features.goldFeatures(lake.read("silver", "historical"),
       key = "canonical_id", date = "date", close = "close",
       volume = "volume", mcap = "market_cap", tiebreak = col("coin_id"))
-    lake.write(gold, "gold", "features")
-    val goldRows = lake.read("gold", "features").count()
+    val goldRows = lake.write(gold, "gold", "features").rows
 
     // 5. Derivatives-style daily snapshot: idempotent partition append of
-    //    the latest day (derivatives_snapshot_etl.py:48-56).
+    //    the latest day (derivatives_snapshot_etl.py:48-56), cut from the
+    //    silver artifact rather than a recomputed silver lineage.
     log("step 5/5: daily snapshot -> derivatives")
-    val latest = silver.agg(max(date_format(col("date"), "yyyy-MM-dd"))).head.getString(0)
-    val snap = silver.withColumn("snap_date", date_format(col("date"), "yyyy-MM-dd"))
+    val latest = silverOut[String]("latest")
+    val snap = lake.read("silver", "historical")
+      .withColumn("snap_date", date_format(col("date"), "yyyy-MM-dd"))
       .filter(col("snap_date") === latest)
     val wrote = lake.writeSnapshotIfAbsent(snap, "derivatives", "daily",
       "snap_date", latest)
 
     log("all pipelines completed successfully")
-    Summary(universeRows, bronzeRows, silverRows, goldRows, gate.removed, wrote)
+    Summary(universeRows, bronzeRows, silverOut.rows, goldRows, gate.removed, wrote)
   }
 
   /** Bronze contract from the `events` testdata table: per-(user, day)

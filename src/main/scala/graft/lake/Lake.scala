@@ -1,7 +1,11 @@
 package graft.lake
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** The engine-side analog of the reference's two-tier cache / data lake
   * (`DataPersistenceLayer`, pipeline_helpers.py:34-102): Parquet datasets
@@ -22,10 +26,21 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Layout: `root/<layer>/<name>/` parquet directories, optionally
   * partitioned; partition pruning then serves date-ranged reads without
   * listing the full dataset — the 100 TB path.
+  *
+  * One Spark job per layer boundary: `write` reports its row count (and
+  * any caller aggregates) from the write job itself, and `read` of an
+  * unpartitioned artifact this instance wrote skips the footer schema
+  * inference job — a chain hands off through the lake without paying a
+  * readback count or an inference job per layer.
   */
 final class Lake(spark: SparkSession, root: String) {
 
   private def path(parts: String*): String = (root +: parts).mkString("/")
+
+  /** Schemas of the unpartitioned artifacts this instance wrote. Per
+    * instance: an artifact another writer touches is only seen through
+    * inference. */
+  private val written = TrieMap.empty[String, StructType]
 
   private def fs(p: String) =
     new Path(p).getFileSystem(spark.sessionState.newHadoopConf())
@@ -38,17 +53,31 @@ final class Lake(spark: SparkSession, root: String) {
   /** Cache get: Some(df) if the artifact exists, else None — the caller
     * decides whether to recompute (pipeline_helpers.py:55-70). */
   def readIfExists(layer: String, name: String): Option[DataFrame] =
-    if (exists(layer, name)) Some(spark.read.parquet(path(layer, name))) else None
+    if (exists(layer, name)) Some(read(layer, name)) else None
 
-  def read(layer: String, name: String): DataFrame =
-    spark.read.parquet(path(layer, name))
+  /** The artifact as a parquet frame. An unpartitioned artifact this
+    * instance wrote is read with the schema it was written with, so the
+    * read plans without a footer-inference job (the file source makes
+    * every field nullable either way, so the schema equals inference);
+    * partitioned artifacts and artifacts written elsewhere are inferred. */
+  def read(layer: String, name: String): DataFrame = {
+    val p = path(layer, name)
+    written.get(p).fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
+  }
 
-  /** Cache set: overwrite the artifact (pipeline_helpers.py:72-91). */
+  /** Cache set: overwrite the artifact (pipeline_helpers.py:72-91).
+    * Returns the rows written plus the `observe` aggregates (each needs
+    * an alias), all observed on the write job itself — no readback. */
   def write(df: DataFrame, layer: String, name: String,
-      partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path(layer, name))
+      partitionBy: Seq[String] = Nil, observe: Seq[Column] = Nil): Lake.Written = {
+    val p = path(layer, name)
+    val obs = Observation()
+    val w = df.observe(obs, count(lit(1)).as(Lake.RowsKey), observe: _*)
+      .write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(p)
+    if (partitionBy.isEmpty) written(p) = df.schema else written.remove(p)
+    val got = obs.get
+    Lake.Written(got(Lake.RowsKey).asInstanceOf[Long], got - Lake.RowsKey)
   }
 
   /** Idempotent daily snapshot: skip if this partition already exists
@@ -154,6 +183,14 @@ final class Lake(spark: SparkSession, root: String) {
 }
 
 object Lake {
+  /** What one [[Lake.write]] job observed: the rows it wrote and the
+    * caller's extra aggregates by alias. */
+  final case class Written(rows: Long, observed: Map[String, Any]) {
+    def apply[T](alias: String): T = observed(alias).asInstanceOf[T]
+  }
+
+  private val RowsKey = "_lake_rows"
+
   /** Manifest delta of one [[Lake.compact]] run. `rowsVerified` covers
     * only the rewritten leaves (untouched leaves are never re-read). */
   final case class CompactStats(filesBefore: Long, filesAfter: Long,

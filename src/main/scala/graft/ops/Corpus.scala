@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.util.Materialize.Ops
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,17 +34,23 @@ object Corpus {
       .withColumn("n_chars", length(col("text")))
 
   /** PII redaction pass (the q_text_pii identity, TextOps.piiRedact):
-    * returns the redacted frame plus the number of documents whose text
-    * changed. Two map-only scans (one aggregate for the count, one for
-    * the downstream write) — no shuffle, no materialization; null text
-    * passes through unchanged and uncounted. */
-  def redactPii(docs: DataFrame): (DataFrame, Long) = {
-    val red = docs.withColumn("_red", TextOps.piiRedact(col("text")))
-    val changed = red.filter(col("_red") =!= col("text")).count()
-    val out = red.withColumn("text", col("_red")).drop("_red")
+    * returns the redacted frame plus an Observation that counts, as
+    * `PiiChanged`, the documents whose text changed. One map-only scan:
+    * the count is observed on the frame's first action (the caller's
+    * write), so `get` on the Observation blocks until that action has
+    * run. No shuffle, no materialization; null text passes through
+    * unchanged and uncounted. */
+  def redactPii(docs: DataFrame): (DataFrame, Observation) = {
+    val pii = Observation()
+    val out = docs.withColumn("_red", TextOps.piiRedact(col("text")))
+      .observe(pii, count_if(col("_red") =!= col("text")).as(PiiChanged))
+      .withColumn("text", col("_red")).drop("_red")
       .withColumn("n_chars", length(col("text")))
-    (out, changed)
+    (out, pii)
   }
+
+  /** The [[redactPii]] Observation's changed-document count. */
+  val PiiChanged = "pii_changed"
 
   def exactDedup(docs: DataFrame, normalized: Boolean = false): DataFrame = {
     val id = if (normalized) TextOps.normalizeText(col("text")) else col("text")
@@ -190,7 +196,8 @@ object Corpus {
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") > 1)
       .select("doc_id")
-      .materialized()
+      // lazy: the caller's write of the kept frame materializes it
+      .materialized(eager = false)
     docs.join(dropIds, Seq("doc_id"), "left_anti")
   }
 
@@ -216,8 +223,8 @@ object Corpus {
   /** Quality gate: drop documents whose repetition signals exceed the
     * thresholds — and, when `minEntropy` is set, whose token entropy
     * falls below it (template/spam floor). Returns (kept, removedCount);
-    * the flagged id set is checkpointed so the signal subtrees run once,
-    * not once per consumer. */
+    * the flagged id set is checkpointed lazily, so the removed count's
+    * own job runs the signal subtrees once and `kept` reuses the blocks. */
   def qualityFilter(docs: DataFrame, maxDupTokenFrac: Double,
       maxTopBigramFrac: Double, minEntropy: Option[Double] = None): (DataFrame, Long) = {
     val repBad = repetitionSignals(docs)
@@ -227,7 +234,7 @@ object Corpus {
     val bad = minEntropy.fold(repBad) { h =>
       repBad.union(tokenEntropy(docs).filter(col("entropy") < h).select("doc_id"))
         .distinct()
-    }.materialized()
+    }.materialized(eager = false)
     val kept = docs.join(bad, Seq("doc_id"), "left_anti")
     (kept, bad.count())
   }
@@ -275,13 +282,14 @@ object Corpus {
     * source's documents entirely (they are eval data — training on them
     * is the failure the gate exists to prevent) and drops training
     * documents whose overlap fraction exceeds `maxFrac`. Returns
-    * (kept, flaggedTrainingDocs). */
+    * (kept, flaggedTrainingDocs); the flagged set is checkpointed lazily,
+    * so the count's own job materializes it. */
   def contaminationFilter(docs: DataFrame, benchSource: String,
       maxFrac: Double): (DataFrame, Long) = {
     val flagged = contaminationScan(docs, benchSource, flagFrac = maxFrac)
       .filter(col("flagged"))
       .select("doc_id")
-      .materialized()
+      .materialized(eager = false)
     val kept = docs.filter(col("source") =!= benchSource)
       .join(flagged, Seq("doc_id"), "left_anti")
     (kept, flagged.count())

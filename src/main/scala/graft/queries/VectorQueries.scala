@@ -30,7 +30,8 @@ object VectorQueries {
     * codegen'd `decimal_dot` Expression (functions.DecimalDot) — the
     * higher-order `aggregate(zip_with(...))` form computes the same value
     * but evaluates a Catalyst expression tree per element (measured 20×
-    * slower on a 200k-pair microbench — graft.tools.MicroDot);
+    * slower on a 200k-pair microbench; the one-off bench is in git
+    * history as graft.tools.MicroDot);
     * DecimalDotSpec pins bit-equality of the two forms. */
   private def dotExpr(a: String, b: String): String =
     s"decimal_dot($a, $b)"
@@ -160,7 +161,7 @@ object VectorQueries {
   }
 
   /** Exact brute-force cosine top-k for queries vec_id < 10 — the ground
-    * truth every ANN variant is measured against (RecallProbe, and the
+    * truth every ANN variant is measured against (ANNRecallSpec, and the
     * registered q_ann_cosine_topk / q_eval_ndcg). Returns
     * (q, c, cosine, rn ≤ k).
     *
@@ -2084,8 +2085,8 @@ object VectorQueries {
 
   /** nDCG@3 of the registered seed-IVF search against the exact cosine
     * top-3 — the ranking-quality eval beside the recall@3 probes
-    * (RecallProbe measures recall; this certifies POSITION quality, and
-    * unlike the probe it is oracle-gated). rel ∈ {0,1} by membership in
+    * (ANNRecallSpec pins recall; this certifies POSITION quality, and
+    * unlike that spec it is oracle-gated). rel ∈ {0,1} by membership in
     * the exact top-3; DCG = Σ rel·disc(rn) with disc = 1/log2(rn+1)
     * PINNED to the 2⁻³⁰ grid (log2 is engine-computed — the pin absorbs
     * sub-grid libm drift, the r8 transcendental-score contract), summed

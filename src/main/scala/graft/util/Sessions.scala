@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** One place for engine tuning so Verify / Bench / tests / user code get
   * identical sessions.
   *
-  * Scale rationale (targets a 1000-executor cluster; local[32] for tests):
+  * Scale rationale (targets a 1000-executor cluster; locally one core
+  * per available processor unless SPARK_GRAFT_CPUS says otherwise):
   * - shuffle.partitions = cores locally; at cluster scale set ~2-3× total
   *   cores and let AQE coalesce — AQE is ON here for the same reason.
   * - WindowExec/SMJ buffers: Spark spills window/join buffers to disk
@@ -68,7 +69,8 @@ object Sessions {
       .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "4194304")
       .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "2147483647")
 
-  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
+  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)): SparkSession = {
     val s = builder(cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // engine-native functions available to expr()/SQL in every session
