@@ -26,11 +26,7 @@ object Bench {
     def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
-    // dev-only subset filter (format smoke tests); the driver never sets
-    // this, so its runs always measure the whole registry
-    val onlyIds = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => onlyIds.forall(_.contains(n)))
     // warmup: compile every plan + JIT the engine once. Only NonFatal
     // failures are the query's own; a fatal JVM error (OOM, linkage) ends
     // the run instead of being timed as a "failed" query.

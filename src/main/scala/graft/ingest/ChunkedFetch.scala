@@ -43,15 +43,8 @@ object ChunkedFetch {
       .toSeq
   }
 
-  /** Run `fetch` once per chunk, one chunk per task. Retries a failed
-    * chunk up to `maxRetries` times with exponential backoff starting at
-    * `backoffMs`; sleeps `throttleMs` after each successful fetch (the
-    * reference's per-request courtesy sleep, applied per task).
-    *
-    * Only `NonFatal` failures are retried: fatal errors (OutOfMemoryError
-    * etc.) propagate immediately, and `InterruptedException` rethrows with
-    * the interrupt flag restored so Spark task-kill / speculation
-    * cancellation is never swallowed into a backoff sleep. */
+  /** Run `fetch` once per chunk, one chunk per task, each inside
+    * [[withRetry]]. */
   def fetchPartitioned[T: Encoder: scala.reflect.ClassTag](spark: SparkSession, chunks: Seq[Chunk],
       fetch: Chunk => Iterator[T], throttleMs: Long = 0L,
       maxRetries: Int = 3, backoffMs: Long = 1000L): Dataset[T] = {
@@ -59,27 +52,45 @@ object ChunkedFetch {
       .parallelize(chunks, math.max(chunks.size, 1))
       .mapPartitions { it =>
         it.flatMap { ch =>
-          var attempt = 0
-          var out: Option[Vector[T]] = None
-          var last: Throwable = null
-          while (out.isEmpty && attempt <= maxRetries) {
-            if (attempt > 0) Thread.sleep(backoffMs << (attempt - 1))
-            try out = Some(fetch(ch).toVector)
-            catch {
-              case e: InterruptedException =>
-                Thread.currentThread().interrupt(); throw e
-              case scala.util.control.NonFatal(e) => last = e
-            }
-            attempt += 1
-          }
-          // courtesy throttle applies to successful fetches only — a chunk
-          // that exhausted its retries should fail immediately, not sleep
-          if (out.isDefined && throttleMs > 0) Thread.sleep(throttleMs)
-          out.getOrElse(throw new IllegalStateException(
-            s"chunk ${ch.idx} [${ch.fromSec},${ch.toSec}] failed after $attempt attempts", last))
+          withRetry(throttleMs, maxRetries, backoffMs)(fetch(ch))(attempts =>
+            s"chunk ${ch.idx} [${ch.fromSec},${ch.toSec}] failed after $attempts attempts")
         }
       }
     spark.createDataset(rdd)
+  }
+
+  /** The retry/backoff/throttle contract every upstream fetch runs under
+    * (this object's chunks and the `graft-rest` source's partitions).
+    * Drains `fetch` eagerly, so a failure mid-payload retries the whole
+    * payload. Retries up to `maxRetries` times with exponential backoff
+    * starting at `backoffMs`; sleeps `throttleMs` after a successful fetch
+    * (the reference's per-request courtesy sleep, applied per task). After
+    * the last failed attempt it throws an IllegalStateException carrying
+    * `failure(attempts)` and the last cause.
+    *
+    * Only `NonFatal` failures are retried: fatal errors (OutOfMemoryError
+    * etc.) propagate immediately, and `InterruptedException` rethrows with
+    * the interrupt flag restored so Spark task-kill / speculation
+    * cancellation is never swallowed into a backoff sleep. */
+  private[graft] def withRetry[T](throttleMs: Long, maxRetries: Int, backoffMs: Long)(
+      fetch: => Iterator[T])(failure: Int => String): Vector[T] = {
+    var attempt = 0
+    var out: Option[Vector[T]] = None
+    var last: Throwable = null
+    while (out.isEmpty && attempt <= maxRetries) {
+      if (attempt > 0) Thread.sleep(backoffMs << (attempt - 1))
+      try out = Some(fetch.toVector)
+      catch {
+        case e: InterruptedException =>
+          Thread.currentThread().interrupt(); throw e
+        case scala.util.control.NonFatal(e) => last = e
+      }
+      attempt += 1
+    }
+    // courtesy throttle applies to successful fetches only — a fetch that
+    // exhausted its retries should fail immediately, not sleep
+    if (out.isDefined && throttleMs > 0) Thread.sleep(throttleMs)
+    out.getOrElse(throw new IllegalStateException(failure(attempt), last))
   }
 
   /** The task id executing the current fetch — for tests/telemetry

@@ -172,14 +172,6 @@ final class Lake(spark: SparkSession, root: String) {
     }
     Lake.CompactStats(before, after, rewritten, rows, bytes)
   }
-
-  /** JSON artifacts (universe maps, lookup dicts;
-    * pipeline_helpers.py:83-84,97-99). */
-  def writeJson(df: DataFrame, layer: String, name: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path(layer, name))
-
-  def readJson(layer: String, name: String): DataFrame =
-    spark.read.json(path(layer, name))
 }
 
 object Lake {

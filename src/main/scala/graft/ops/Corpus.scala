@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.util.Materialize.Ops
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,18 +11,12 @@ import org.apache.spark.sql.functions._
   * count, and every join/aggregate keys on doc_id, a hash, or a band key
   * (see DESIGN.md §2 for the per-operator scale arguments).
   *
-  * Caching: reuse points go through the util.Materialize gate —
-  * localCheckpoint by default (bounded plans, blocks reclaimed with the
-  * frame), switchable to persist / reliable checkpoint for clusters with
-  * executor churn (see Materialize's scaladoc for the trade-offs).
+  * Caching: reuse points are localCheckpoint'ed — lineage-free executor
+  * blocks that keep iterative plans bounded and are reclaimed with the
+  * frame, so the session CacheManager stays empty (CacheHygieneSpec).
   */
 object Corpus {
 
-  /** Exact-duplicate keeper filter: one representative (min doc_id) per
-    * distinct text. Linear: hash → groupBy → semi-join. With
-    * `normalized = true` the identity is the case/punctuation/whitespace-
-    * normalized hash (TextOps.normalizeText) — catches re-encoded copies
-    * byte-exact dedup misses; same cost shape. */
   /** C4-style within-document cleanup: drop every line after its first
     * occurrence (order-preserving, the q_text_dedup_lines identity) and
     * recompute n_chars. Map-only; the identity on single-line documents.
@@ -52,6 +45,11 @@ object Corpus {
   /** The [[redactPii]] Observation's changed-document count. */
   val PiiChanged = "pii_changed"
 
+  /** Exact-duplicate keeper filter: one representative (min doc_id) per
+    * distinct text. Linear: hash → groupBy → semi-join. With
+    * `normalized = true` the identity is the case/punctuation/whitespace-
+    * normalized hash (TextOps.normalizeText) — catches re-encoded copies
+    * byte-exact dedup misses; same cost shape. */
   def exactDedup(docs: DataFrame, normalized: Boolean = false): DataFrame = {
     val id = if (normalized) TextOps.normalizeText(col("text")) else col("text")
     val keepers = docs
@@ -128,7 +126,7 @@ object Corpus {
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct().materialized(eager = false)
+      .distinct().localCheckpoint(eager = false)
     def chk(df: DataFrame): (Long, Long, Long) = {
       val r = df.agg(count(lit(1)), sum("src"), sum("dst")).head()
       (r.getLong(0),
@@ -166,7 +164,7 @@ object Corpus {
         .select(col("dst").as("src"), col("m").as("dst"))
         .union(mSmall.select(col("src"), col("m").as("dst")))
         .distinct()
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val cur = chk(next)
       converged = cur == prev && next.exceptAll(e).isEmpty
       e = next
@@ -197,7 +195,7 @@ object Corpus {
       .filter(col("rn") > 1)
       .select("doc_id")
       // lazy: the caller's write of the kept frame materializes it
-      .materialized(eager = false)
+      .localCheckpoint(eager = false)
     docs.join(dropIds, Seq("doc_id"), "left_anti")
   }
 
@@ -234,7 +232,7 @@ object Corpus {
     val bad = minEntropy.fold(repBad) { h =>
       repBad.union(tokenEntropy(docs).filter(col("entropy") < h).select("doc_id"))
         .distinct()
-    }.materialized(eager = false)
+    }.localCheckpoint(eager = false)
     val kept = docs.join(bad, Seq("doc_id"), "left_anti")
     (kept, bad.count())
   }
@@ -257,7 +255,7 @@ object Corpus {
       .distinct()
       // feeds the size aggregate AND the overlap join; localCheckpoint so
       // the blocks free with the result frame (cache hygiene, r4)
-      .materialized()
+      .localCheckpoint()
     val st = train.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     // hash-PREFIXED sort-merge keys (r13): joining on (xxhash64(shingle),
     // shingle) leaves the result identical — the hash is a function of
@@ -289,7 +287,7 @@ object Corpus {
     val flagged = contaminationScan(docs, benchSource, flagFrac = maxFrac)
       .filter(col("flagged"))
       .select("doc_id")
-      .materialized(eager = false)
+      .localCheckpoint(eager = false)
     val kept = docs.filter(col("source") =!= benchSource)
       .join(flagged, Seq("doc_id"), "left_anti")
     (kept, flagged.count())

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.util.Materialize.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -175,23 +174,7 @@ object Quantiles {
     * the broadcast per-bucket exclusive prefix back and adds the
     * within-bucket exclusive prefix (`Window.partitionBy(_bkt)` — bounded
     * partitions). Integer weights make the result bit-identical to the
-    * single-task window at any partitioning. */
-  def exclusivePrefixSum(df: DataFrame, orderCol: String, weight: String,
-      outCol: String, buckets: Int = 4096): DataFrame =
-    groupPrefixSum(df, Nil, orderCol, weight, outCol, inclusive = false, buckets)
-
-  /** PER-GROUP generalization of [[exclusivePrefixSum]] (r15): the running
-    * sum of `weight` under the ascending order of `orderCol` WITHIN each
-    * `part` group — exclusive (window `... AND 1 PRECEDING`) or inclusive
-    * (`... AND CURRENT ROW`). Same caller contract: `orderCol` values are
-    * DISTINCT per row within a group and non-null (group first if not).
-    *
-    * Only the (group, bucket) histogram sees an unpartitioned/
-    * low-cardinality window (≤ groups × 4097 rows); rows rank inside
-    * their bucket — `Window.partitionBy(part :+ bucket)` — bounded
-    * partitions, fully parallel. Integer weights make the decomposition
-    * bit-identical to the single-task window at any partitioning (the
-    * [[exclusivePrefixSum]] argument, per group).
+    * single-task window at any partitioning.
     *
     * MEASURED r15 caveat: the midrank/value-histogram stats family
     * (Spearman, Mann-Whitney, Kruskal, median test, Bowley, trimmed
@@ -202,24 +185,20 @@ object Quantiles {
     * prices: ≤ ~10M distinct regardless of corpus), so the single-task
     * sort stays a bounded straggler at 100 TB, not a scale killer. Use
     * this helper when the order column's domain genuinely grows with the
-    * corpus (the [[exclusivePrefixSum]] callers). */
-  def groupPrefixSum(df: DataFrame, part: Seq[String], orderCol: String,
-      weight: String, outCol: String, inclusive: Boolean,
-      buckets: Int = 4096): DataFrame = {
+    * corpus. */
+  def exclusivePrefixSum(df: DataFrame, orderCol: String, weight: String,
+      outCol: String, buckets: Int = 4096): DataFrame = {
     val shift = 52 - (64 - java.lang.Long.numberOfLeadingZeros(math.max(buckets - 1, 1)))
     val nb = expr(s"double_bits(cast(`$orderCol` as double) + 0.0D)")
     val sortable = when(nb < 0, nb.bitwiseXOR(lit(Long.MaxValue))).otherwise(nb)
     val rows = df.withColumn("_bkt", shiftright(sortable, shift))
-    val pCols = part.map(col)
-    val bhist = rows.groupBy(pCols :+ col("_bkt"): _*).agg(sum(weight).as("_bsum"))
-    val wB = Window.partitionBy(pCols: _*).orderBy("_bkt")
+    val bhist = rows.groupBy(col("_bkt")).agg(sum(weight).as("_bsum"))
+    val wB = Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
+    val bpre = bhist.select(col("_bkt"),
+      coalesce(sum("_bsum").over(wB), lit(0L)).as("_bpre"))
+    val wIn = Window.partitionBy("_bkt").orderBy(orderCol)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val bpre = bhist.select(pCols ++ Seq(col("_bkt"),
-      coalesce(sum("_bsum").over(wB), lit(0L)).as("_bpre")): _*)
-    val hi = if (inclusive) Window.currentRow else -1L
-    val wIn = Window.partitionBy(pCols :+ col("_bkt"): _*).orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, hi)
-    rows.join(broadcast(bpre), part :+ "_bkt")
+    rows.join(broadcast(bpre), Seq("_bkt"))
       .withColumn(outCol, col("_bpre") + coalesce(sum(weight).over(wIn), lit(0L)))
       .drop("_bkt", "_bpre")
   }

@@ -16,26 +16,25 @@ object Taxonomy {
     * overrides win over everything; unmatched → fallback. */
   def classifyArray(categories: Column, tiers: Seq[(String, String)],
       overrides: Seq[(Column, String)] = Nil,
-      fallback: String = "Uncategorized"): Column = {
-    val base: Column = overrides.foldLeft(Option.empty[Column]) {
-      case (acc, (cond, label)) =>
-        Some(acc.fold(when(cond, label))(_.when(cond, label)))
-    }.getOrElse(when(lit(false), lit(null)))
-    tiers.foldLeft(base) { case (acc, (kw, label)) =>
-      acc.when(exists(categories, c => lower(c).contains(kw)), label)
-    }.otherwise(fallback)
-  }
+      fallback: String = "Uncategorized"): Column =
+    classify(kw => exists(categories, c => lower(c).contains(kw)), tiers, overrides, fallback)
 
   /** Same over a single free-text column. */
   def classifyText(text: Column, tiers: Seq[(String, String)],
       overrides: Seq[(Column, String)] = Nil,
-      fallback: String = "Uncategorized"): Column = {
+      fallback: String = "Uncategorized"): Column =
+    classify(kw => lower(text).contains(kw), tiers, overrides, fallback)
+
+  /** The shared when-chain: overrides first, then one branch per tier
+    * whose keyword satisfies `matches`, then `fallback`. */
+  private def classify(matches: String => Column, tiers: Seq[(String, String)],
+      overrides: Seq[(Column, String)], fallback: String): Column = {
     val base: Column = overrides.foldLeft(Option.empty[Column]) {
       case (acc, (cond, label)) =>
         Some(acc.fold(when(cond, label))(_.when(cond, label)))
     }.getOrElse(when(lit(false), lit(null)))
     tiers.foldLeft(base) { case (acc, (kw, label)) =>
-      acc.when(lower(text).contains(kw), label)
+      acc.when(matches(kw), label)
     }.otherwise(fallback)
   }
 

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.util.Materialize.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -226,19 +225,6 @@ object TextOps {
     words.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH candidate pairs (doc_a < doc_b, distinct) from a signature frame:
-    * 4 bands of 2 minhashes → self-join on the band key. The shuffle key
-    * is the band key, so cost is Σ bucket² not corpus². The band frame
-    * feeds both join sides; by default it is materialized via the
-    * util.Materialize gate (localCheckpoint unless configured otherwise) —
-    * uncached, the signature subtree computes twice; a lazy persist()
-    * would park blocks in the CacheManager until an explicit unpersist
-    * that a query-shaped API has no hook for, while checkpoint blocks
-    * free with the frame. Pass `materialize = false` when `sig` is
-    * ALREADY a materialized frame (q_minhash_jaccard_est checkpoints the
-    * signature itself for its rerank joins): banding is then a cheap map
-    * over checkpoint blocks and a second eager materialization — one
-    * blocking job + block write per query run — would only add cost. */
   /** The 4 band keys of a signature frame: (doc_id, band, k1, k2) — the
     * LSH blocking key shared by self-join pairing (minhashPairsFromSig),
     * cross-corpus dedup (q_dedup_incremental) and the streaming ingest's
@@ -249,9 +235,21 @@ object TextOps {
         col(s"mh${2 * b}").as("k1"), col(s"mh${2 * b + 1}").as("k2"))
     }.reduce(_ unionByName _)
 
+  /** LSH candidate pairs (doc_a < doc_b, distinct) from a signature frame:
+    * 4 bands of 2 minhashes → self-join on the band key. The shuffle key
+    * is the band key, so cost is Σ bucket² not corpus². The band frame
+    * feeds both join sides, so it is localCheckpoint'ed — uncached, the
+    * signature subtree computes twice; a lazy persist() would park blocks
+    * in the CacheManager until an explicit unpersist that a query-shaped
+    * API has no hook for, while checkpoint blocks free with the frame.
+    * Pass `materialize = false` when `sig` is ALREADY a materialized frame
+    * (q_minhash_jaccard_est checkpoints the signature itself for its
+    * rerank joins): banding is then a cheap map over checkpoint blocks and
+    * a second eager materialization — one blocking job + block write per
+    * query run — would only add cost. */
   def minhashPairsFromSig(sig: DataFrame, materialize: Boolean = true): DataFrame = {
     val banded = minhashBands(sig)
-    val bands = if (materialize) banded.materialized() else banded
+    val bands = if (materialize) banded.localCheckpoint() else banded
     val a = bands.as("a"); val b = bands.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.k1") === col("b.k1")
         && col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))

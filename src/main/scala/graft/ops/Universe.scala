@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Point-in-time universe generation
   * (universe_generation_pipeline.py:144-179): month bucket → per-(month,
   * asset) mean value → row_number rank (pandas `rank(method='first')`) →
-  * top-N → relational universe table (month, id) + serialized map form.
+  * top-N → relational universe table (month, id).
   * Survivorship-bias-free by construction: each month ranks only on data
   * from that month.
   */
@@ -29,14 +29,4 @@ object Universe {
   def universeTable(df: DataFrame, date: String, id: String, value: String,
       n: Int): DataFrame =
     topNPerMonth(df, date, id, value, n).select(col("month"), col(id))
-
-  /** Serialized map form: one row per month, ordered id list
-    * (universe_generation_pipeline.py:168-171). */
-  def universeMap(df: DataFrame, date: String, id: String, value: String,
-      n: Int): DataFrame =
-    topNPerMonth(df, date, id, value, n)
-      .groupBy(date_format(col("month"), "yyyy-MM-01").as("month_key"))
-      .agg(collect_list(struct(col("rn"), col(id))).as("pairs"))
-      .select(col("month_key"),
-        transform(array_sort(col("pairs")), x => x.getField(id)).as("ids"))
 }

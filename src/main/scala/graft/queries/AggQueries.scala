@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Q
 import graft.util.Exact
-import graft.util.Materialize.Ops
 import graft.util.Tables._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -23,7 +22,7 @@ object AggQueries {
   import org.apache.spark.sql.{DataFrame, SparkSession}
 
   /** r15 measured reversal of the r14 MODULE-WIDE fact-scan fan-out.
-    * Per-id A/B with spark.graft.fanout=off (3 reps each, this JVM)
+    * Per-id A/B against the bare scan (3 reps each, this JVM)
     * split the module's 43 carriers cleanly in two:
     *   - WINNERS (fan-out kept, via [[lineitemWide]] below): the
     *     heavy-per-row decimal-moment aggregates — corr 0.85 vs 1.8 s,
@@ -382,7 +381,7 @@ object AggQueries {
       val dh = lineitem(s, d)
         .select(graft.ops.TextOps.hash32(col("l_partkey").cast("string")).as("h"))
         .distinct()
-        .materialized() // feeds BOTH the sketch top-k and the exact count
+        .localCheckpoint() // feeds BOTH the sketch top-k and the exact count
       // per-partition top-k + driver merge of k longs: TakeOrderedAndProject
       val sk = dh.orderBy("h").limit(KmvK)
         .agg(count(lit(1)).cast("long").as("k_filled"), max("h").as("kth_hash"))
@@ -434,11 +433,11 @@ object AggQueries {
         .select(col("l_returnflag").as("grp"),
           graft.ops.TextOps.hash32(col("l_partkey").cast("string")).as("h"))
         .distinct()
-        .materialized() // sketches AND the exact global count read it
+        .localCheckpoint() // sketches AND the exact global count read it
       val w = Window.partitionBy("grp").orderBy("h")
       val pg = dh.withColumn("rn", row_number().over(w)).filter(col("rn") <= KmvK)
         .select("grp", "h")
-        .materialized(eager = false) // per-group rows AND the merge
+        .localCheckpoint(eager = false) // per-group rows AND the merge
       def est(kf: Column, kth: Column) =
         when(kf < KmvK, kf.cast("double"))
           .otherwise(lit(KmvK - 1) * 4294967296.0 / kth)
@@ -480,7 +479,7 @@ object AggQueries {
       val b = lineitem(s, d)
         .groupBy(floor(col("l_extendedprice") / HistW).cast("long").as("bin"))
         .agg(count(lit(1)).as("n"))
-        .materialized() // bins-sized; feeds the total AND the output rows
+        .localCheckpoint() // bins-sized; feeds the total AND the output rows
       val t = b.agg(sum("n").cast("long").as("total"))
       b.crossJoin(broadcast(t))
         .select(col("bin"), (col("bin") * HistW).as("bin_lo"), col("n"),
@@ -580,7 +579,7 @@ object AggQueries {
           Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
         // r15: lazy — the picks and the exact side's offsets all live in
         // ONE action now; an eager checkpoint was a blocking extra job
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       // exact side: per-BIN prefix (partitioned window, parallel and
       // bounded by bin occupancy) + broadcast bins-sized offsets = the
       // global cumulative rank with no data-sized single-partition pass.
@@ -737,7 +736,7 @@ object AggQueries {
       val h = lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_extendedprice"))
         .agg(count(lit(1)).as("c"))
-        .materialized(eager = false) // feeds the median AND the dev histogram
+        .localCheckpoint(eager = false) // feeds the median AND the dev histogram
       val m = graft.ops.Quantiles.groupQuantilesDiscW(
           h, "l_returnflag", "l_extendedprice", "c", Seq((0.5, "med")))
         .select(col("l_returnflag"), col("n"), col("med"))
@@ -852,7 +851,7 @@ object AggQueries {
       val p = lineitem(s, d)
         .groupBy(col("l_partkey"), date_trunc("month", col("l_shipdate")).as("m"))
         .agg(Exact.exactAvg(col("l_extendedprice")).as("p"))
-        .materialized(eager = false) // feeds the market mean AND the returns
+        .localCheckpoint(eager = false) // feeds the market mean AND the returns
       // driver-side scalars parameterize the grid exponent (the
       // bloomM/seedSamp pattern); one extra corpus-linear job over the
       // materialized p frame
@@ -955,7 +954,7 @@ object AggQueries {
       val v = lineitemWide(s, d)
         .groupBy(date_trunc("day", col("l_shipdate")).as("date"), col("l_partkey"))
         .agg(Exact.exactSum(col("l_quantity")).as("vol"))
-        .materialized(eager = false) // feeds the totals AND the fold
+        .localCheckpoint(eager = false) // feeds the totals AND the fold
       val t = v.groupBy("date")
         .agg(Exact.exactSum(col("vol")).as("tot"), count(lit(1)).as("n_assets"))
       val share = col("vol") / col("tot")
@@ -1208,7 +1207,7 @@ object AggQueries {
         .groupBy(col("l_returnflag").as("f"), col("l_quantity").as("x"),
           col("l_extendedprice").as("y"))
         .agg(count(lit(1)).as("c"))
-        .materialized(eager = false) // both value histograms AND the join read it
+        .localCheckpoint(eager = false) // both value histograms AND the join read it
       def midranks(vCol: String, out: String): org.apache.spark.sql.DataFrame = {
         val cnt = s"c$out"
         val w = Window.partitionBy("f").orderBy(vCol)
@@ -1268,7 +1267,7 @@ object AggQueries {
       val c = lineitem(s, d)
         .groupBy(col("l_returnflag").as("rf"), col("l_linestatus").as("ls"))
         .agg(count(lit(1)).cast("double").as("o"))
-        .materialized(eager = false) // feeds margins AND the chi2 fold
+        .localCheckpoint(eager = false) // feeds margins AND the chi2 fold
       val m = c.groupBy("rf").agg(sum("o").as("rt"))
       val lm = c.groupBy("ls").agg(sum("o").as("ct"))
       val t = c.agg(sum("o").as("n"), countDistinct("rf").as("nr"),
@@ -1322,7 +1321,7 @@ object AggQueries {
       val h = lineitemWide(s, d)
         .select(col("l_returnflag"), col("l_extendedprice").as("px"))
         .groupBy("l_returnflag", "px").agg(count(lit(1)).as("c"))
-        .materialized(eager = false) // feeds Q1/Q3 AND the fence fold
+        .localCheckpoint(eager = false) // feeds Q1/Q3 AND the fence fold
       val iqr = col("q3") - col("q1")
       val fences = graft.ops.Quantiles
         .groupQuantilesDiscW(h, "l_returnflag", "px", "c", Seq(0.25 -> "q1", 0.75 -> "q3"))
@@ -1507,7 +1506,7 @@ object AggQueries {
       val mo = z.groupBy("g").agg(count(lit(1)).as("n"),
         sum(col("z").cast("decimal(38,8)")).as("sd"),
         sum((col("z") * col("z")).cast("decimal(38,4)")).as("qd"))
-        .materialized(eager = false) // totals AND the F folds read it
+        .localCheckpoint(eager = false) // totals AND the F folds read it
       val tt = mo.agg(sum("n").cast("long").as("nn"), count(lit(1)).as("k"),
         sum("sd").cast("double").as("s"))
       val mj = col("sd").cast("double") / col("n").cast("double")
@@ -1638,7 +1637,7 @@ object AggQueries {
       val cell = lineitem(s, d)
         .groupBy(col("l_quantity").as("x"), col("l_discount").as("y"))
         .agg(count(lit(1)).as("nc"))
-        .materialized() // cell×cell join + both margins + the total read it
+        .localCheckpoint() // cell×cell join + both margins + the total read it
       val a = cell.select(col("x").as("ax"), col("y").as("ay"),
         col("nc").cast("decimal(38,0)").as("anc"))
       val b = cell.select(col("x").as("bx"), col("y").as("by"), col("nc").as("bnc"))
@@ -1742,7 +1741,7 @@ object AggQueries {
       val v = lineitem(s, d)
         .groupBy(col("l_returnflag").as("flag"), col("l_quantity").as("q"))
         .agg(count(lit(1)).as("c"))
-        .materialized() // both sides of the pair join
+        .localCheckpoint() // both sides of the pair join
       val a = v.select(col("flag"), col("q").as("aq"), col("c").cast("decimal(38,0)").as("ac"))
       val b = v.select(col("flag").as("bflag"), col("q").as("bq"), col("c").as("bc"))
       val w = a.join(broadcast(b), col("bflag") === col("flag") && col("bq") >= col("aq"))
@@ -1923,7 +1922,7 @@ object AggQueries {
           .as(s"q_${cols4(i)}_${cols4(j)}")
       val m = lineitemWide(s, d)
         .agg(count(lit(1)).as("n"), (sums ++ prods): _*)
-        .materialized(eager = false) // the 10-row pair spine reads it
+        .localCheckpoint(eager = false) // the 10-row pair spine reads it
       val pairs = (for (i <- cols4.indices; j <- i until cols4.length) yield
         m.select(lit(cols4(i)).as("ci"), lit(cols4(j)).as("cj"),
           col(s"s_${cols4(i)}").as("si"), col(s"s_${cols4(j)}").as("sj"),
@@ -1979,7 +1978,7 @@ object AggQueries {
           .as(s"q_${cols4(i)}_${cols4(j)}")
       val m = lineitemWide(s, d)
         .agg(count(lit(1)).as("n"), (sums ++ prods): _*)
-        .materialized(eager = false) // the 10-row pair spine reads it
+        .localCheckpoint(eager = false) // the 10-row pair spine reads it
       val pairs = (for (i <- cols4.indices; j <- i until cols4.length) yield
         m.select(lit(cols4(i)).as("ci"), lit(cols4(j)).as("cj"),
           col(s"s_${cols4(i)}").as("si"), col(s"s_${cols4(j)}").as("sj"),
@@ -2044,7 +2043,7 @@ object AggQueries {
           .as(s"q_${cols4(i)}_${cols4(j)}")
       val m = lineitemWide(s, d)
         .agg(count(lit(1)).as("n"), (sums ++ prods): _*)
-        .materialized(eager = false) // the 12-row triple spine reads it
+        .localCheckpoint(eager = false) // the 12-row triple spine reads it
       val nD = col("n").cast("double")
       def qc(i: Int, j: Int) =
         if (i <= j) col(s"q_${cols4(i)}_${cols4(j)}") else col(s"q_${cols4(j)}_${cols4(i)}")

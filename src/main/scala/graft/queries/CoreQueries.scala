@@ -115,17 +115,15 @@ object CoreQueries {
   /** The reference's flagship shape: point-in-time top-N universe — month
     * bucket → grouped mean → row_number rank (`method='first'` ≡
     * row_number, NOT rank()) → top-N filter
-    * (universe_generation_pipeline.py:144-171, N=100).
+    * (universe_generation_pipeline.py:144-171, N=100) — the
+    * `ops.Universe.topNPerMonth` the market chain runs.
     * One shuffle for the groupBy, one for the month-partitioned window;
     * rank-limit pushdown keeps the window streaming at scale. */
   val winRankFirst = Q("q_win_rank_first",
     "monthly top-100 by mean value, row_number rank")(universeSql) {
     (s, d) =>
-      val m = orders(s, d)
-        .groupBy(date_trunc("month", col("o_orderdate")).as("month"), col("o_custkey"))
-        .agg(Exact.exactAvg(col("o_totalprice")).as("avg_mcap"))
-      val w = Window.partitionBy("month").orderBy(col("avg_mcap").desc, col("o_custkey"))
-      m.withColumn("rn", row_number().over(w).cast("long")).filter(col("rn") <= 100)
+      graft.ops.Universe.topNPerMonth(orders(s, d), "o_orderdate", "o_custkey",
+        "o_totalprice", 100).withColumnRenamed("avg_value", "avg_mcap")
   }
 
   /** Top-K per group, smaller K over the fact table (§2.7 q_topk_month). */

@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.util.Materialize.Ops
 import graft.Q
 import graft.ops.TextOps
 import graft.util.Tables._
@@ -191,7 +190,7 @@ object CorpusQueries {
           explode(array(keys: _*)).as("key"))
         // both self-join sides read the signature subtree; materialize it
         // once (localCheckpoint: blocks free with the frame)
-        .materialized()
+        .localCheckpoint()
       blocked.as("a")
         .join(blocked.as("b"), col("a.key") === col("b.key")
           && col("a.doc_id") < col("b.doc_id"))

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Q
 import graft.ops.TextOps
-import graft.util.Materialize.Ops
 import graft.util.Portable
 import graft.util.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -69,7 +68,7 @@ object CorpusStatsQueries {
       // once (strategy gate; lazy — blocks appear inside the query's own
       // first action) instead of re-running the token explode three times
       val tf = tokw.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
       // N = |documents| exactly (split('') = [''] gives every doc >= 1
       // token row), read from the table directly: keeps the broadcast
@@ -130,7 +129,7 @@ object CorpusStatsQueries {
       // one token-explode pass: (doc, word) counts materialize (lazy),
       // then dl is a vocabulary-collapse sum and tf a term filter of it
       val tfw = tokw.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val dl = tfw.groupBy("doc_id").agg(sum("tf").as("dl"))
       // corpus scalars from the raw scans, NOT from the materialized tfw:
       // total tokens = |tokw| and N = |documents| (same values as
@@ -235,7 +234,7 @@ object CorpusStatsQueries {
       // bigram counts feed the corpus total AND the scoring join:
       // materialize (lazy) so the bigram explode runs once
       val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cab"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val cu = tokw.groupBy("word").agg(count(lit(1)).as("cw"))
       val tot = cu.agg(sum("cw").as("t"))
       val totb = cb.agg(sum("cab").as("tb"))
@@ -334,7 +333,7 @@ object CorpusStatsQueries {
     (s, d) =>
       // the fingerprint table feeds the frequency cap, both join sides
       // and the set sizes: materialize once
-      val fp = TextOps.winnowFingerprints(documents(s, d)).materialized(eager = false)
+      val fp = TextOps.winnowFingerprints(documents(s, d)).localCheckpoint(eager = false)
       val fpf = fp.groupBy("fp").agg(count(lit(1)).as("nd")).filter(col("nd") <= 8)
         .select("fp")
       val fpk = fp.join(fpf, "fp")
@@ -385,7 +384,7 @@ object CorpusStatsQueries {
     (s, d) =>
       val tf = TextOps.explodeTokens(documents(s, d))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val lcf = Portable.pln(
         tf.groupBy("word").agg(sum("tf").as("cf")),
         col("cf").cast("double"), "lcf")
@@ -445,7 +444,7 @@ object CorpusStatsQueries {
         .filter(col("i") + 1 <= size(col("sp")))
         .select(col("doc_id"), element_at(col("sp"), col("i")).as("w1"),
           element_at(col("sp"), col("i") + 1).as("w2"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("cab"))
       val cu = TextOps.explodeTokens(docs).groupBy("word").agg(count(lit(1)).as("cw"))
       val bpl = Portable.pln(
@@ -484,7 +483,7 @@ object CorpusStatsQueries {
       val scored = textUnigramLogprob.fn(s, d)
         .join(documents(s, d).select("doc_id", "lang"), "doc_id")
         .select("doc_id", "lang", "logprob")
-        .materialized()
+        .localCheckpoint()
       graft.ops.Quantiles.exactNtile(scored, part = "lang", value = "logprob",
         ord = col("doc_id"), tiles = 3, outCol = "ppl_bucket")
   }
@@ -546,7 +545,7 @@ object CorpusStatsQueries {
       val vv = cu.agg(count(lit(1)).as("v"))
       // held-out bigram positions feed the distinct-score join AND the
       // per-doc fold: materialize once
-      val vb = bigramsOf(valD).materialized(eager = false)
+      val vb = bigramsOf(valD).localCheckpoint(eager = false)
       val px = vb.select("w1", "w2").distinct()
         .join(cb, Seq("w1", "w2"), "left")
         .join(cu, Seq("w1"), "left")
@@ -618,7 +617,7 @@ object CorpusStatsQueries {
       val tf = TextOps.shingles3(documents(s, d))
         .groupBy(col("doc_id"), col("shingle").as("g"))
         .agg(count(lit(1)).as("tf"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val df = tf.groupBy("g").agg(count(lit(1)).as("df"))
         .filter(col("df") <= CosDfCap)
       val n = documents(s, d).agg(count(lit(1)).as("n"))
@@ -628,7 +627,7 @@ object CorpusStatsQueries {
       val rw = tf.join(idf, "g")
         .select(col("doc_id"), col("g"),
           (col("tf").cast("double") * col("idf")).as("w"))
-        .materialized(eager = false) // feeds norms AND both join sides
+        .localCheckpoint(eager = false) // feeds norms AND both join sides
       val nrm = rw.groupBy("doc_id")
         .agg(sqrt(graft.util.Exact.portableSum(col("w") * col("w"))).as("nrm"))
       val dots = rw.as("a").join(rw.as("b"),
@@ -740,7 +739,7 @@ object CorpusStatsQueries {
         .select(col("word"), col("n"), col("ib.i").as("i"), col("ib.b").as("b"))
       val wc = TextOps.explodeTokens(documents(s, d))
         .groupBy("word").agg(count(lit(1)).as("n"))
-        .materialized() // feeds the sketch cells AND the exact top-k
+        .localCheckpoint() // feeds the sketch cells AND the exact top-k
       val cm = withBuckets(wc).groupBy("i", "b").agg(sum("n").as("cnt"))
       val top = wc.orderBy(col("n").desc, col("word")).limit(HhK)
       withBuckets(top).join(broadcast(cm), Seq("i", "b"))
@@ -787,7 +786,7 @@ object CorpusStatsQueries {
       // (source, word) counts feed the source totals, the corpus totals
       // AND the scored join: materialize once
       val cs = tw.groupBy("source", "word").agg(count(lit(1)).as("cs"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val ts = cs.groupBy("source").agg(sum("cs").as("ts"))
       val cw = cs.groupBy("word").agg(sum("cs").as("cw"))
       val nn = cw.agg(sum("cw").as("n"))
@@ -847,7 +846,7 @@ object CorpusStatsQueries {
       val tw = TextOps.explodeTokens(documents(s, d))
         .join(documents(s, d).select("doc_id", "source"), "doc_id")
       val cs = tw.groupBy("source", "word").agg(count(lit(1)).as("cs"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val ts = cs.groupBy("source").agg(sum("cs").as("ts"))
       val cw = cs.groupBy("word").agg(sum("cs").as("cw"))
       val nn = cw.agg(sum("cw").as("n"))
@@ -1108,7 +1107,7 @@ object CorpusStatsQueries {
       "FROM dc LEFT JOIN nw ON nw.decile = dc.decile") {
     (s, d) =>
       val tokw = TextOps.explodeTokens(documents(s, d))
-        .materialized(eager = false) // first-occurrence agg AND the doc universe
+        .localCheckpoint(eager = false) // first-occurrence agg AND the doc universe
       val fw = tokw.groupBy("word").agg(min("doc_id").as("fd"))
       val dd = graft.ops.Quantiles.exactNtile(
         tokw.select("doc_id").distinct().withColumn("_g", lit(1)),
@@ -1163,7 +1162,7 @@ object CorpusStatsQueries {
       val h = documents(s, d).filter(col("text").isNotNull)
         .select(col("doc_id"), col("source"),
           TextOps.contentHash(TextOps.normalizeText(col("text"))).as("nh"))
-        .materialized(eager = false) // group keys, keeper lookup, and the fold
+        .localCheckpoint(eager = false) // group keys, keeper lookup, and the fold
       val gk = h.groupBy("nh").agg(min("doc_id").as("keeper"))
       val ks = gk.join(h.select(col("doc_id"), col("source").as("ksource")),
         col("keeper") === col("doc_id")).select("nh", "keeper", "ksource")
@@ -1258,12 +1257,12 @@ object CorpusStatsQueries {
       import graft.util.Exact
       val dh = TextOps.explodeTokens(documents(s, d))
         .select(TextOps.hash32(col("word")).as("h")).distinct()
-        .materialized() // feeds the registers AND the exact count
+        .localCheckpoint() // feeds the registers AND the exact count
       val rho = hllRhoFromHashes(dh) // dh shared with the exact count
       val regs = s.range(HllM).select(col("id").as("bucket"))
         .join(rho.groupBy("bucket").agg(max("rho").as("mr")), Seq("bucket"), "left")
         .select(col("bucket"), coalesce(col("mr"), lit(0L)).as("r"))
-        .materialized() // the register rows AND the indicator fold read it
+        .localCheckpoint() // the register rows AND the indicator fold read it
       val ind = regs.agg(
         sum(expr(s"shiftleft(CAST(1 AS BIGINT), CAST(${HllRemBits + 1} - r AS INT))"))
           .cast("long").as("ind"),
@@ -1322,7 +1321,7 @@ object CorpusStatsQueries {
       import s.implicits._
       val wc = TextOps.explodeTokens(documents(s, d))
         .groupBy("word").agg(count(lit(1)).as("c"))
-        .materialized() // the total AND the top-k read it
+        .localCheckpoint() // the total AND the top-k read it
       val tot = wc.agg(sum("c").cast("long").as("t"), count(lit(1)).as("v"))
       val maxN = CovTops.max.toInt
       val topk = wc.orderBy(col("c").desc, col("word")).limit(maxN)
@@ -1372,7 +1371,7 @@ object CorpusStatsQueries {
       val ds = TextOps.explodeTokens(documents(s, d))
         .join(documents(s, d).select("doc_id", "source"), "doc_id")
         .select("word", "source")
-        .materialized(eager = false) // per-source AND corpus-wide counts
+        .localCheckpoint(eager = false) // per-source AND corpus-wide counts
       def hapaxOf(df: DataFrame, keys: Seq[String]): DataFrame = {
         val wc = df.groupBy((keys :+ "word").map(col): _*).agg(count(lit(1)).as("c"))
         wc.groupBy(keys.map(col): _*)
@@ -1444,7 +1443,7 @@ object CorpusStatsQueries {
         .groupBy("wlen")
         .agg(count(lit(1)).as("n_tokens"),
           countDistinct("word").as("n_types"))
-        .materialized(eager = false) // the total AND the output read it
+        .localCheckpoint(eager = false) // the total AND the output read it
       val t = h.agg(sum("n_tokens").cast("long").as("tot"))
       h.crossJoin(broadcast(t))
         .select(col("wlen"), col("n_tokens"), col("n_types"),
@@ -1488,7 +1487,7 @@ object CorpusStatsQueries {
       val ds = TextOps.explodeTokens(documents(s, d))
         .join(documents(s, d).select("doc_id", "source"), "doc_id")
         .select("word", "source")
-        .materialized(eager = false) // per-source AND corpus-wide counts
+        .localCheckpoint(eager = false) // per-source AND corpus-wide counts
       def simpsonOf(df: DataFrame, keys: Seq[String]): DataFrame = {
         val wc = df.groupBy((keys :+ "word").map(col): _*)
           .agg(count(lit(1)).as("c"))
@@ -1633,7 +1632,7 @@ object CorpusStatsQueries {
       val ds = TextOps.explodeTokens(documents(s, d))
         .join(documents(s, d).select("doc_id", "source"), "doc_id")
         .select("word", "source")
-        .materialized(eager = false) // per-source AND corpus-wide spectra
+        .localCheckpoint(eager = false) // per-source AND corpus-wide spectra
       def kOf(df: DataFrame, keys: Seq[String]): DataFrame = {
         val wc = df.groupBy((keys :+ "word").map(col): _*).agg(count(lit(1)).as("c"))
         val s1 = sum("c").cast("double")
@@ -1736,7 +1735,7 @@ object CorpusStatsQueries {
     (s, d) =>
       import graft.util.Exact
       val tokw = TextOps.explodeTokens(documents(s, d))
-        .materialized(eager = false) // windows AND the raw TTR read it
+        .localCheckpoint(eager = false) // windows AND the raw TTR read it
       val wlen = tokw
         .select(col("doc_id"), expr("(i - 1) div 50").as("win"), col("word"))
         .groupBy("doc_id", "win")

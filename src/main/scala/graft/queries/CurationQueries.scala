@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Q
 import graft.ops.TextOps
-import graft.util.Materialize.Ops
 import graft.util.Portable
 import graft.util.Tables._
 import org.apache.spark.sql.functions._
@@ -98,7 +97,7 @@ object CurationQueries {
               i => TextOps.hash32(concat_ws(" ", slice(col("sp"), i, lit(W))))))
             .otherwise(typedLit(Array.empty[Long]))).as("wh"))
         // feeds both the distinct-doc grouping and the mark join: one scan
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val dw = wins.groupBy("wh").agg(countDistinct("doc_id").as("nd"))
         .filter(col("nd") >= 2).select(col("wh"), lit(1L).as("isdup"))
       val pd = wins.join(dw, Seq("wh"), "left")
@@ -237,7 +236,7 @@ object CurationQueries {
       // final scored fold: materialize once
       val tf = TextOps.explodeTokens(documents(s, d))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val cr = tf.groupBy("word").agg(sum("tf").as("cr"))
       val ct0 = tf
         .join(documents(s, d).filter(col("lang") === "en").select("doc_id"), "doc_id")
@@ -245,7 +244,7 @@ object CurationQueries {
       // vocabulary-sized word table feeds the scalar totals AND the pln
       val ctt = cr.join(ct0, Seq("word"), "left")
         .select(col("word"), col("cr"), coalesce(col("ct"), lit(0L)).as("ct"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val sc = ctt.agg(sum("ct").as("tt"), sum("cr").as("tr"), count(lit(1)).as("v"))
       val lw = Portable.pln(ctt.crossJoin(broadcast(sc)),
           ((col("ct").cast("double") + 1.0) * col("tr").cast("double")) /
@@ -520,7 +519,7 @@ object CurationQueries {
           explode(split(col("text"), "[.!?]+")).as("raw"))
         .select(col("doc_id"), lower(trim(col("raw"))).as("sent"))
         .filter(length(col("sent")) >= 20)
-        .materialized(eager = false) // feeds the df count AND the per-doc join
+        .localCheckpoint(eager = false) // feeds the df count AND the per-doc join
       val df = sq.groupBy("sent").agg(countDistinct("doc_id").as("ndocs"))
       val pd = sq.join(df, "sent")
         .groupBy("doc_id")

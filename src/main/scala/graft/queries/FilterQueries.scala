@@ -160,11 +160,8 @@ object FilterQueries {
         "plated" -> "DeFi: Plated",
         "polished" -> "Infrastructure: Polished",
         "brushed" -> "Meme: Brushed")
-      val overrides = when(col("p_partkey") === 1, "Genesis")
-        .when(col("p_partkey") === 2, "Contract")
-      val chain = tiers.foldLeft(overrides) { case (acc, (kw, label)) =>
-        acc.when(lower(col("p_type")).contains(kw), label)
-      }.otherwise("Uncategorized")
+      val chain = graft.ops.Taxonomy.classifyText(col("p_type"), tiers,
+        overrides = Seq((col("p_partkey") === 1) -> "Genesis", (col("p_partkey") === 2) -> "Contract"))
       part(s, d).select(col("p_partkey"), col("p_type"), chain.as("standard_category"))
   }
 

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Q
 import graft.util.Exact
-import graft.util.Materialize.Ops
 import graft.util.Tables._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -224,7 +223,7 @@ object JoinQueries {
   }) {
     (s, d) =>
       val dim = orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey").distinct().materialized()
+        .select("o_orderkey").distinct().localCheckpoint()
       // driver-side count parameterizes the plan (the seedSamp pattern);
       // the materialized dim frame pays the job once for count + bits
       val m = bloomM(dim.count())
@@ -434,7 +433,7 @@ object JoinQueries {
       val w = Window.partitionBy("period").orderBy(col("spend").desc, col("o_custkey"))
       val uni = spend.withColumn("rn", row_number().over(w)).filter(col("rn") <= 10)
         .select("period", "o_custkey")
-        .materialized(eager = false) // sizes, kept (twice)
+        .localCheckpoint(eager = false) // sizes, kept (twice)
       val sizes = uni.groupBy("period").agg(count(lit(1)).as("k"))
       val kept = uni.as("a")
         .join(uni.as("b"), col("b.o_custkey") === col("a.o_custkey") &&

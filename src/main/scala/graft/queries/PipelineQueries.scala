@@ -3,7 +3,6 @@ package graft.queries
 import graft.Q
 import graft.ops.TextOps
 import graft.util.{Exact, Portable}
-import graft.util.Materialize.Ops
 import graft.util.Tables._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,7 +84,7 @@ object PipelineQueries {
         size(split(trim(col("text")), "\\s+")).cast("long").as("toks"))
       val g = sh.groupBy("shard")
         .agg(count(lit(1)).as("n_docs"), sum("toks").as("n_tokens"))
-        .materialized() // the spine join AND the total read it
+        .localCheckpoint() // the spine join AND the total read it
       val t = g.agg(sum("n_docs").cast("long").as("total_docs"))
       s.range(NShards).select(col("id").as("shard"))
         .join(g, Seq("shard"), "left")
@@ -509,7 +508,7 @@ object PipelineQueries {
           (col("lang") === "en").cast("int").as("y")), "doc_id")
         .select(floor(col("score") * G).cast("long").as("g"),
           floor(col("score") * CalInvW).cast("long").as("bin"), col("y"))
-        .materialized(eager = false) // totals AND bins read it
+        .localCheckpoint(eager = false) // totals AND bins read it
       val diff = col("g") - col("y") * G.toLong
       val tot = lab.agg(count(lit(1)).as("n"), sum("y").cast("long").as("a"),
         sum(diff.cast("decimal(38,0)") * diff).as("b2"))
@@ -1181,7 +1180,7 @@ object PipelineQueries {
         base.filter(f).withColumn("rn", row_number().over(w))
           .filter(col("rn") === 1).select("l_partkey", "px")
       val o = snap(col("l_shipdate") <= lit(DiffOldEnd).cast("timestamp"))
-        .materialized() // diffed against n AND merged against chg
+        .localCheckpoint() // diffed against n AND merged against chg
       val n = snap(col("l_shipdate") > lit(DiffOldEnd).cast("timestamp") &&
         col("l_shipdate") <= lit(DiffNewEnd).cast("timestamp"))
       val chg = o.as("o").join(n.as("n"),
@@ -1307,7 +1306,7 @@ object PipelineQueries {
           (col("lang") === "en").cast("int").as("y")), "doc_id")
       val g = lab.groupBy("score")
         .agg(count(lit(1)).as("n"), sum("y").cast("long").as("np"))
-        .materialized(eager = false) // the prefix, the totals, and the cut
+        .localCheckpoint(eager = false) // the prefix, the totals, and the cut
       // strictly-greater mass = total − (exclusive-below + self)
       val c = graft.ops.Quantiles.exclusivePrefixSum(g, "score", "n", "d_lt")
       val t = g.agg(sum("n").cast("long").as("nd"), sum("np").cast("long").as("npos"))
@@ -1435,7 +1434,7 @@ object PipelineQueries {
         .crossJoin(broadcast(b))
         .select(col("value"),
           when(dnum < expr("(mind + maxd + 1) div 2"), 1).otherwise(2).as("half"))
-        .materialized(eager = false) // bin fitting AND the binned counts read it
+        .localCheckpoint(eager = false) // bin fitting AND the binned counts read it
       val h = e.filter(col("half") === 1).groupBy("value").agg(count(lit(1)).as("c"))
       val wCum = Window.orderBy("value")
       val w = h.withColumn("cum", sum("c").over(wCum))

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Q
 import graft.util.Exact
-import graft.util.Materialize.Ops
 import graft.util.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -298,7 +297,7 @@ object PrepQueries {
     val base = embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"), _.cast("double")).as("ev"))
     val mu = embExplode(embeddings(s, d)).groupBy("i")
-      .agg((Exact.exactSum(col("e")) / count(lit(1))).as("mu")).materialized()
+      .agg((Exact.exactSum(col("e")) / count(lit(1))).as("mu")).localCheckpoint()
     // d-sized frames travel as ONE packed array row (the fold-assignment
     // broadcast shape): array_sort on struct(i, ·) orders by i
     val muPack = mu.select(struct(col("i"), col("mu")).as("m"))
@@ -306,7 +305,7 @@ object PrepQueries {
       .select(transform(col("ms"), _.getField("mu")).as("mu_arr"))
     val packed = base.crossJoin(broadcast(muPack))
       .select(col("vec_id"), zip_with(col("ev"), col("mu_arr"), (x, m) => x - m).as("c_arr"))
-      .materialized() // all iterations re-read the centered corpus
+      .localCheckpoint() // all iterations re-read the centered corpus
     def step(vPack: DataFrame): DataFrame = {
       val withDot = packed.crossJoin(broadcast(vPack))
         .select(col("c_arr"), ddot(col("c_arr"), col("v_arr")).as("dot"))
@@ -316,7 +315,7 @@ object PrepQueries {
         .agg(Exact.exactSum(col("c") * col("dot")).as("sv"))
       val nrm = sF.agg(sqrt(Exact.exactSum(col("sv") * col("sv"), 4)).as("nrm"))
       sF.crossJoin(broadcast(nrm))
-        .select(col("i"), (col("sv") / col("nrm")).as("vv")).materialized()
+        .select(col("i"), (col("sv") / col("nrm")).as("vv")).localCheckpoint()
     }
     val v0 = muPack.select(transform(col("mu_arr"), _ => lit(0.125)).as("v_arr"))
     val vT = (1 to PcaIters).foldLeft((v0, Option.empty[DataFrame])) {
@@ -742,7 +741,7 @@ object PrepQueries {
       import s.implicits._
       val t = documents(s, d).filter(col("text").isNotNull)
         .select(size(split(trim(col("text")), "\\s+")).cast("long").as("toks"))
-        .materialized(eager = false) // totals AND the sweep read it
+        .localCheckpoint(eager = false) // totals AND the sweep read it
       val w = Seq(512L, 1024L, 2048L, 4096L).toDF("ctx")
       val tot = t.agg(count(lit(1)).as("n_docs"), sum("toks").cast("long").as("n_tokens"))
       val f = t.crossJoin(broadcast(w)).filter(col("toks") <= col("ctx"))

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.Q
 import graft.util.Exact
-import graft.util.Materialize.Ops
 import graft.util.Tables._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -144,7 +143,7 @@ object SessionQueries {
       "CAST(min(CASE WHEN cum >= ceil(0.9 * n) THEN dur_us END) AS BIGINT) AS p90_us " +
       "FROM cm GROUP BY 1, 2") {
     (s, d) =>
-      val g3 = funnelStaged(s, d).materialized() // both stage slices read it
+      val g3 = funnelStaged(s, d).localCheckpoint() // both stage slices read it
       val ps = Seq(0.5 -> "p50_us", 0.9 -> "p90_us")
       def stage(name: String, dur: Column, conv: Column): DataFrame =
         graft.ops.Quantiles.groupQuantilesDisc(
@@ -191,7 +190,7 @@ object SessionQueries {
         .select(bucket.as("bucket_lo"), col("duration_us"))
         .groupBy("bucket_lo")
         .agg(count(lit(1)).as("n_sessions"), sum("duration_us").as("sdur"))
-        .materialized() // the total AND the output rows read it
+        .localCheckpoint() // the total AND the output rows read it
       val t = g.agg(sum("n_sessions").cast("long").as("tot"))
       g.crossJoin(broadcast(t))
         .select(col("bucket_lo"), col("n_sessions"),
@@ -496,7 +495,7 @@ object SessionQueries {
     (s, d) =>
       val e = events(s, d).select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"))
-        .materialized(eager = false) // the split scalar AND both halves
+        .localCheckpoint(eager = false) // the split scalar AND both halves
       val sp = e.agg(expr("(min(ts_us) + max(ts_us)) div 2").as("cut"))
       val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
       def pairsOf(half: DataFrame): DataFrame = half
@@ -512,7 +511,7 @@ object SessionQueries {
       val acc = pairs.join(broadcast(pr), Seq("ft"), "left")
         .groupBy("ft").agg(count(lit(1)).as("n_pairs"),
           sum(when(col("tt") === col("pred"), 1).otherwise(0)).cast("long").as("n_hit"))
-        .materialized(eager = false) // per-type rows AND the TOTAL fold
+        .localCheckpoint(eager = false) // per-type rows AND the TOTAL fold
       val perType = acc.join(broadcast(pr), Seq("ft"), "left")
         .select(col("ft").as("from_type"), col("pred").as("pred_type"),
           col("n_pairs"), col("n_hit"),
@@ -600,7 +599,7 @@ object SessionQueries {
       " END AS conv_rate FROM w LEFT JOIN cv ON cv.win_us = w.win_us CROSS JOIN b") {
     (s, d) =>
       import s.implicits._
-      val g3 = funnelStaged(s, d).materialized(eager = false) // base AND sweep
+      val g3 = funnelStaged(s, d).localCheckpoint(eager = false) // base AND sweep
       val w = Seq(3600000000L, 21600000000L, 86400000000L).toDF("win_us")
       val b = g3.agg(count("vt").as("n_views"))
       val cv = g3.filter(col("ct").isNotNull).crossJoin(broadcast(w))
@@ -636,7 +635,7 @@ object SessionQueries {
       val c = events(s, d).filter(col("ts").isNotNull)
         .select(hour(col("ts")).cast("long").as("hr"), col("event_type"))
         .groupBy("hr", "event_type").agg(count(lit(1)).as("n"))
-        .materialized(eager = false) // hour totals AND the global total
+        .localCheckpoint(eager = false) // hour totals AND the global total
       val h = c.groupBy("hr").agg(sum("n").cast("long").as("hn"))
       val t = c.agg(sum("n").cast("long").as("tot"))
       c.join(broadcast(h), "hr").crossJoin(broadcast(t))
@@ -707,7 +706,7 @@ object SessionQueries {
         .agg(count(lit(1)).as("frequency"),
           max(date_trunc("day", col("ts"))).as("last_day"),
           Exact.exactSum(col("value")).as("monetary"))
-        .materialized() // exactNtile reads its input 3x, hz a 4th time
+        .localCheckpoint() // exactNtile reads its input 3x, hz a 4th time
       val hz = u.agg(max("last_day").as("horizon"))
       val scored = graft.ops.Quantiles.exactNtile(
         u.withColumn("_g", lit(1)), part = "_g", value = "monetary",
@@ -884,7 +883,7 @@ object SessionQueries {
     (s, d) =>
       val c = events(s, d).groupBy("user_id", "event_type")
         .agg(count(lit(1)).as("n"))
-        .materialized(eager = false) // feeds the total AND the ranked pick
+        .localCheckpoint(eager = false) // feeds the total AND the ranked pick
       val t = c.groupBy("user_id").agg(sum("n").as("n_total"))
       val w = Window.partitionBy("user_id").orderBy(col("n").desc, col("event_type"))
       c.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -928,7 +927,7 @@ object SessionQueries {
     * can never drift. The pair set is the state algebra: set union is
     * idempotent, which is what makes the streaming store replay-proof. */
   private[graft] def dauWauFromPairs(ud0: DataFrame): DataFrame = {
-    val ud = ud0.materialized(eager = false) // feeds DAU and the window explode
+    val ud = ud0.localCheckpoint(eager = false) // feeds DAU and the window explode
     val dau = ud.groupBy("dnum").agg(count(lit(1)).as("dau"))
     val wau = ud.select(col("user_id"), col("dnum"),
         explode(sequence(lit(0L), lit(6L))).as("o"))
@@ -994,9 +993,9 @@ object SessionQueries {
       val pm = tc.join(broadcast(tot), "from_type")
         .select(col("from_type"), col("to_type"),
           (col("n").cast("double") / col("n_from")).as("p"))
-        .materialized() // three iterations read the same matrix
+        .localCheckpoint() // three iterations read the same matrix
       val types = events(s, d).select(col("event_type").as("t")).distinct()
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val k = types.agg(count(lit(1)).as("k"))
       var pi = types.crossJoin(broadcast(k))
         .select(col("t"), (lit(1.0) / col("k")).as("pi"))
@@ -1042,7 +1041,7 @@ object SessionQueries {
       val g = events(s, d)
         .select(expr("(unix_micros(ts) div 86400000000 + 4) % 7").as("dow"))
         .groupBy("dow").agg(count(lit(1)).as("n"))
-        .materialized(eager = false) // shares, the total, and the chi2 fold
+        .localCheckpoint(eager = false) // shares, the total, and the chi2 fold
       val t = g.agg(sum("n").cast("long").as("total"))
       val exp7 = col("total").cast("double") / 7.0
       val c = g.crossJoin(broadcast(t))
@@ -1158,7 +1157,7 @@ object SessionQueries {
         .groupBy("user_id").agg(count(lit(1)).as("n"))
       val h = uc.groupBy("n").agg(count(lit(1)).as("nu"),
           (col("n") * count(lit(1))).cast("long").as("ne"))
-        .materialized(eager = false) // the prefix, the totals, and the cut
+        .localCheckpoint(eager = false) // the prefix, the totals, and the cut
       // strictly-greater mass = total − (exclusive-below + self)
       val c = graft.ops.Quantiles.exclusivePrefixSum(h, "n", "nu", "u_lt")
       val t = h.agg(sum("nu").cast("long").as("tu"), sum("ne").cast("long").as("te"))
@@ -1296,7 +1295,7 @@ object SessionQueries {
       val e = events(s, d).filter(col("user_id").isNotNull)
         .select(col("user_id"), expr("unix_micros(ts) div 86400000000").as("dnum"))
         .distinct()
-        .materialized(eager = false) // the first-day dimension AND the fold
+        .localCheckpoint(eager = false) // the first-day dimension AND the fold
       val f = e.groupBy("user_id").agg(min("dnum").as("first_day"))
       val isNew = when(col("dnum") === col("first_day"), 1).otherwise(0)
       e.join(f, "user_id")
@@ -1352,7 +1351,7 @@ object SessionQueries {
   private[graft] def churnFromDayPairs(ud: DataFrame): DataFrame = {
     val mu = ud.select(expr("dnum div 7").as("wnum"), col("user_id"))
       .distinct()
-      .materialized(eager = false) // feeds actives, the shifted join AND the max
+      .localCheckpoint(eager = false) // feeds actives, the shifted join AND the max
     val act = mu.groupBy("wnum").agg(count(lit(1)).as("n_active"))
     val nxt = mu.select((col("wnum") - 1).as("wnum"), col("user_id"))
     val ret = mu.join(nxt, Seq("wnum", "user_id"))
@@ -1432,7 +1431,7 @@ object SessionQueries {
         sum("x").as("sx"), sum("y").as("sy"),
         sum(xD * col("x")).as("sxx"), sum(xD * col("y")).as("sxy"),
         sum(yD * col("y")).as("syy"))
-        .materialized(eager = false) // the pooled fold AND the per-arm rows
+        .localCheckpoint(eager = false) // the pooled fold AND the per-arm rows
       val p = a.agg(sum("n").cast("double").as("pn"), sum("sx").cast("double").as("psx"),
         sum("sy").cast("double").as("psy"), sum("sxx").cast("double").as("psxx"),
         sum("sxy").cast("double").as("psxy"), sum("syy").cast("double").as("psyy"))
@@ -1578,9 +1577,9 @@ object SessionQueries {
       val pm = tc.join(broadcast(tot), "from_type")
         .select(col("from_type"), col("to_type"),
           (col("n").cast("double") / col("n_from")).as("p"))
-        .materialized() // three iterations AND the entropy fold read it
+        .localCheckpoint() // three iterations AND the entropy fold read it
       val types = events(s, d).select(col("event_type").as("t")).distinct()
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val k = types.agg(count(lit(1)).as("k"))
       var pi = types.crossJoin(broadcast(k))
         .select(col("t"), (lit(1.0) / col("k")).as("pi"))

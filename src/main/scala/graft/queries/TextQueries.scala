@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.util.Materialize.Ops
 import graft.Q
 import graft.ops.{Multimodal, TextOps}
 import graft.util.Tables._
@@ -20,8 +19,8 @@ import org.apache.spark.sql.functions._
 object TextQueries {
 
   /** r15 MEASURED REVERSAL of the module-wide documents FanOut shadow
-    * (first tried per VERDICT r14 #6, then A/B'd per query with
-    * spark.graft.fanout=off): widening the scan costs ~30-50 ms of CPU
+    * (first tried per VERDICT r14 #6, then A/B'd per query against the
+    * bare scan): widening the scan costs ~30-50 ms of CPU
     * per added task across every downstream stage (local measurement:
     * q_dedup_exact 1.8 → 10.2 s CPU, 0.42 → 0.96 s wall with the shadow;
     * q_dedup_containment 6.2 → 47.8 s CPU; q_dedup_ngram_jaccard,
@@ -132,7 +131,7 @@ object TextQueries {
       // blocking materialization job at query-construction time (measured
       // 4.6× at sf0.1, VERDICT r4); lazy materializes the blocks inside
       // the query's own first action and every later consumer reads them.
-      val sig = TextOps.minhashSig(documents(s, d)).materialized(eager = false)
+      val sig = TextOps.minhashSig(documents(s, d)).localCheckpoint(eager = false)
       val pairs = TextOps.minhashPairsFromSig(sig, materialize = false)
       val nAgree = (0 to 7).map(k =>
         when(col(s"a.mh$k") === col(s"b.mh$k"), 1).otherwise(0)).reduce(_ + _)
@@ -185,12 +184,12 @@ object TextQueries {
     (s, d) =>
       import graft.util.Exact
       val docs = documents(s, d)
-      val sig = TextOps.minhashSig(docs).materialized(eager = false)
+      val sig = TextOps.minhashSig(docs).localCheckpoint(eager = false)
       val lsh = TextOps.minhashPairsFromSig(sig, materialize = false)
         .filter(col("doc_a") < 500 && col("doc_b") < 500)
-        .materialized(eager = false) // the catch join AND its own count
+        .localCheckpoint(eager = false) // the catch join AND its own count
       val ush = TextOps.shingles3(docs.filter(col("doc_id") < 500)).distinct()
-        .materialized(eager = false) // sizes AND both sides of the pair join
+        .localCheckpoint(eager = false) // sizes AND both sides of the pair join
       val usz = ush.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val uin = ush.as("a").join(ush.as("b"),
           col("b.shingle") === col("a.shingle") && col("a.doc_id") < col("b.doc_id"))
@@ -201,7 +200,7 @@ object TextQueries {
         .join(usz.select(col("doc_id").as("db"), col("n").as("ny")), "db")
         .filter(col("ab") * 2 >= col("nx") + col("ny") - col("ab"))
         .select("da", "db")
-        .materialized(eager = false) // the catch join AND its own count
+        .localCheckpoint(eager = false) // the catch join AND its own count
       val ct = tru.join(lsh,
           col("doc_a") === col("da") && col("doc_b") === col("db"))
         .agg(count(lit(1)).as("n_caught"))
@@ -252,7 +251,7 @@ object TextQueries {
         .select(least(col("sa"), col("sb")).as("src_a"),
           greatest(col("sa"), col("sb")).as("src_b"))
       val g = sp.groupBy("src_a", "src_b").agg(count(lit(1)).as("n_pairs"))
-        .materialized(eager = false) // cells AND the total read it
+        .localCheckpoint(eager = false) // cells AND the total read it
       val t = g.agg(sum("n_pairs").cast("long").as("tot"))
       g.crossJoin(broadcast(t))
         .select(col("src_a"), col("src_b"), col("n_pairs"),
@@ -317,9 +316,9 @@ object TextQueries {
       import s.implicits._
       val docs = documents(s, d)
       val usig = TextOps.minhashSig(docs).filter(col("doc_id") < 500)
-        .materialized(eager = false) // three banding self-joins read it
+        .localCheckpoint(eager = false) // three banding self-joins read it
       val ush = TextOps.shingles3(docs.filter(col("doc_id") < 500)).distinct()
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val usz = ush.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val uin = ush.as("a").join(ush.as("b"),
           col("b.shingle") === col("a.shingle") && col("a.doc_id") < col("b.doc_id"))
@@ -330,7 +329,7 @@ object TextQueries {
         .join(usz.select(col("doc_id").as("db"), col("n").as("ny")), "db")
         .filter(col("ab") * 2 >= col("nx") + col("ny") - col("ab"))
         .select("da", "db")
-        .materialized(eager = false) // joined by all three bandings
+        .localCheckpoint(eager = false) // joined by all three bandings
       def pairsOf(bands: org.apache.spark.sql.DataFrame,
           keys: Seq[String]): org.apache.spark.sql.DataFrame = {
         val eqs: List[org.apache.spark.sql.Column] =
@@ -462,7 +461,7 @@ object TextQueries {
       "LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b") {
     (s, d) =>
       val docs = documents(s, d)
-      val shd = TextOps.shingles3(docs).distinct().materialized()
+      val shd = TextOps.shingles3(docs).distinct().localCheckpoint()
       // the content facet: an 8-slot minhash bottom-sketch of the shingle
       // set (slots 8..15), unpivoted to (doc_id, slot, fv) rows. Computed
       // over the DISTINCT shingles (min is multiplicity-blind) so the md5
@@ -506,7 +505,7 @@ object TextQueries {
         .filter(abs(col("ca") - col("cb")) <= 8 && col("doc_a") < col("doc_b"))
         .select(col("doc_a"), col("doc_b"))
         .distinct()
-        .materialized()
+        .localCheckpoint()
       val sizes = shd.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
       // hash-PREFIXED intersection keys (r13, the q_contamination trick):
       // joining on (xxhash64(shingle), shingle) is result-identical — the
@@ -623,7 +622,7 @@ object TextQueries {
               "transform(sequence(1, length(text) - 2), " +
               "i -> substring(text, CAST(i AS INT), 3)) END")).as("tri"))
       val dtc = tri.groupBy("doc_id", "tri").agg(count(lit(1)).as("c"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val lp = dtc.join(docs.select("doc_id", "lang"), "doc_id")
         .groupBy("lang", "tri").agg(sum("c").as("c"))
       val wL = Window.partitionBy("lang").orderBy(col("c").desc, col("tri"))
@@ -651,7 +650,7 @@ object TextQueries {
       // character-sized frames stay uncached (the sf10 OOM fix stands).
       val cells = pred.join(docs.select("doc_id", "lang"), "doc_id")
         .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n"))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val tot = cells.groupBy("lang").agg(sum("n").as("n_lang"))
       cells.join(broadcast(tot), "lang")
         .select(col("lang"), col("pred_lang"), col("n"),
@@ -836,7 +835,7 @@ object TextQueries {
       val docs = documents(s, d)
       // distinct shingles feed the sizes AND both sides of the
       // intersection join: materialize once (lazy)
-      val shd = TextOps.shingles3(docs).distinct().materialized(eager = false)
+      val shd = TextOps.shingles3(docs).distinct().localCheckpoint(eager = false)
       val pairs = TextOps.minhashPairs(docs)
       val sizes = shd.groupBy("doc_id").agg(count(lit(1)).as("nsh"))
       // ARRAY-INTERSECT intersection (r14): the naive pairs×shingles
@@ -917,7 +916,7 @@ object TextQueries {
   }) {
     (s, d) =>
       val docs = documents(s, d)
-      val sig = TextOps.minhashSig(docs).materialized(eager = false)
+      val sig = TextOps.minhashSig(docs).localCheckpoint(eager = false)
       val srcs = docs.select("doc_id", "source")
       val isNew = col("source").isin("src0", "src1")
       val banded = (0 to 3).map { b =>

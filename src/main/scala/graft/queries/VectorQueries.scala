@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.util.Exact
-import graft.util.Materialize.Ops
 import graft.Q
 import graft.util.Tables._
 import org.apache.spark.sql.DataFrame
@@ -190,7 +189,7 @@ object VectorQueries {
         (expr(fastCos) / (col("nq") * col("nc"))).as("fcos"),
         (lit(1e-6) / (col("nq") * col("nc"))).as("eps"))
     val wF = Window.partitionBy("q").orderBy(col("fcos").desc, col("c"))
-    val ranked = fast.withColumn("frn", row_number().over(wF)).materialized()
+    val ranked = fast.withColumn("frn", row_number().over(wF)).localCheckpoint()
     val kth = ranked.filter(col("frn") === k)
       .select(col("q"), col("fcos").as("kthf"), col("eps").as("ekth"))
     val surv = ranked.join(broadcast(kth), Seq("q"), "left")
@@ -293,7 +292,7 @@ object VectorQueries {
             "cosine (null embedding element or empty centroid set)')")
             .cast("long"))
           .otherwise(col("cluster")))
-      .materialized(eager = false)
+      .localCheckpoint(eager = false)
   }
 
   private[graft] def ivfTopK(base: DataFrame, cents: DataFrame, k: Int = 3,
@@ -506,7 +505,7 @@ object VectorQueries {
         expr(normExpr("embedding")).as("nrm")) ++ projCols: _*)
       .withColumn("bucket", bucketCol.cast("long"))
       .select("vec_id", "embedding", "nrm", "bucket")
-      .materialized(eager = false)
+      .localCheckpoint(eager = false)
   }
 
   /** The LSH search plan both registered variants delegate to,
@@ -578,7 +577,7 @@ object VectorQueries {
         explode(array(tableCols: _*)).as("tb"))
       .select(col("vec_id"), col("embedding"), col("nrm"),
         col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-      .materialized(eager = false)
+      .localCheckpoint(eager = false)
     val qv = buck.filter(col("vec_id") < 10).select(col("vec_id").as("q"),
       col("embedding").as("eq"), col("nrm").as("nq"), col("t"), col("bucket"))
     val cv = buck.select(col("vec_id").as("c"),
@@ -820,7 +819,7 @@ object VectorQueries {
       k: Long): DataFrame =
     hierStage2(all, cents, k).filter(col("rn") === 1)
       .select(col("vid"), col("cid").as("cluster"))
-      .materialized(eager = false)
+      .localCheckpoint(eager = false)
 
   /** SemDeDup iteration count, the k rule, and the training-sample cap.
     *
@@ -898,7 +897,7 @@ object VectorQueries {
       val assign = assignClusters(all, cents)
       // r15: join vectors to the assignment ONCE (lazy checkpoint) — both
       // self-join sides project from the same frame (the knnGraph pattern)
-      val withVec = all.join(assign, "vid").materialized(eager = false)
+      val withVec = all.join(assign, "vid").localCheckpoint(eager = false)
       val a = withVec.select(col("vid").as("va"), col("cluster"),
         col("ev").as("ea"), col("nv").as("na"))
       val b = withVec.select(col("vid").as("vb"), col("cluster"),
@@ -1020,7 +1019,7 @@ object VectorQueries {
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
       val assign = assignClustersHier(all, cents, k)
       // r15: one vectors⋈assignment join feeds both self-join sides
-      val withVec = all.join(assign, "vid").materialized(eager = false)
+      val withVec = all.join(assign, "vid").localCheckpoint(eager = false)
       val a = withVec.select(col("vid").as("va"), col("cluster"),
         col("ev").as("ea"), col("nv").as("na"))
       val b = withVec.select(col("vid").as("vb"), col("cluster"),
@@ -1166,7 +1165,7 @@ object VectorQueries {
     val all = base.select(col("vec_id").as("vid"),
       col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
     val assign = assignClusters(all, cents)
-    val withVec = all.join(assign, "vid").materialized(eager = false)
+    val withVec = all.join(assign, "vid").localCheckpoint(eager = false)
     val a = withVec.select(col("vid").as("q"), col("cluster"),
       col("ev").as("eq"), col("nv").as("nq"))
     val b = withVec.select(col("vid").as("c"), col("cluster"),
@@ -1285,7 +1284,7 @@ object VectorQueries {
     val buck = withProj
       .select(col("vec_id"), explode(array(tableCols: _*)).as("tb"))
       .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-      .materialized(eager = false)
+      .localCheckpoint(eager = false)
     val cand = buck.select(col("vec_id").as("q"), col("t"), col("bucket"))
       .join(buck.select(col("vec_id").as("c"), col("t"), col("bucket")),
         Seq("t", "bucket"))
@@ -1361,7 +1360,7 @@ object VectorQueries {
       "FROM cur LEFT JOIN best ON best.q = cur.q") {
     (s, d) =>
       import graft.util.Exact
-      val e = lshGraph(s, d).materialized(eager = false)
+      val e = lshGraph(s, d).localCheckpoint(eager = false)
       val cur = e.groupBy("q").agg(min("cosine").as("worst"),
         count(lit(1)).as("n_cur"))
       val hop = e.select(col("q"), col("c").as("b"))
@@ -1411,7 +1410,7 @@ object VectorQueries {
       .select(expr("vec_id div 50").cast("long").as("cid"),
         transform(col("embedding"), _.cast("double")).as("ecent"))
       .withColumn("ncent", expr(normExpr("ecent")))
-      .materialized(eager = false) // seeds feed the super Lloyd step AND stage 2
+      .localCheckpoint(eager = false) // seeds feed the super Lloyd step AND stage 2
 
   /** kNN graph with HIERARCHICAL assignment (r8) — the scale-correct form
     * of q_ann_knn_join. The flat variant measured 12.3× CPU at 10× rows
@@ -1447,7 +1446,7 @@ object VectorQueries {
       val all = base.select(col("vec_id").as("vid"),
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
       val assign = assignClustersHier(all, cents, k)
-      val withVec = all.join(assign, "vid").materialized(eager = false)
+      val withVec = all.join(assign, "vid").localCheckpoint(eager = false)
       val a = withVec.select(col("vid").as("q"), col("cluster"),
         col("ev").as("eq"), col("nv").as("nq"))
       val b = withVec.select(col("vid").as("c"), col("cluster"),
@@ -1495,7 +1494,7 @@ object VectorQueries {
       val all = base.select(col("vec_id").as("vid"),
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
       val s2 = hierStage2(all, cents, k)
-        .materialized(eager = false) // rn=1 is the corpus assignment, rn<=2 the probes
+        .localCheckpoint(eager = false) // rn=1 is the corpus assignment, rn<=2 the probes
       val assign = s2.filter(col("rn") === 1)
         .select(col("vid").as("c"), col("cid").as("cluster"))
       val qprobe = s2.filter(col("vid") < 10 && col("rn") <= 2)
@@ -1539,7 +1538,7 @@ object VectorQueries {
       d: String): DataFrame = {
     val g = graph.fn(s, d)
       .select("q", "c", "cosine")
-      .materialized(eager = false) // both sides of the reciprocity join
+      .localCheckpoint(eager = false) // both sides of the reciprocity join
     g.as("g").join(g.as("r"),
         col("r.q") === col("g.c") && col("r.c") === col("g.q"))
       .filter(col("g.q") < col("g.c"))
@@ -1714,7 +1713,7 @@ object VectorQueries {
         .withColumn("dist2",
           col("ssv") - lit(2) * expr(dotExpr("sub", "cw")) + col("ssc"))
         .select("vid", "s", "code", "dist2")
-        .materialized() // feeds encoding AND the query LUTs
+        .localCheckpoint() // feeds encoding AND the query LUTs
       val wEnc = Window.partitionBy("vid", "s").orderBy(col("dist2"), col("code"))
       val enc = d2.withColumn("rn", row_number().over(wEnc)).filter(col("rn") === 1)
         .select("vid", "s", "code")
@@ -1832,11 +1831,11 @@ object VectorQueries {
 
   private def pagerankFn(mutual: Q)(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
-      val m = mutual.fn(s, d).select("a", "b").materialized(eager = false)
+      val m = mutual.fn(s, d).select("a", "b").localCheckpoint(eager = false)
       val ed = m.select(col("a").as("src"), col("b").as("dst"))
         .union(m.select(col("b").as("src"), col("a").as("dst")))
-        .materialized(eager = false) // the loop's constant: edges never recompute
-      val deg = ed.groupBy("src").agg(count(lit(1)).as("deg")).materialized(eager = false)
+        .localCheckpoint(eager = false) // the loop's constant: edges never recompute
+      val deg = ed.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint(eager = false)
       val nn = deg.agg(count(lit(1)).cast("double").as("n"))
       var r: DataFrame = deg.crossJoin(broadcast(nn))
         .select(col("src").as("v"), (lit(1.0) / col("n")).as("r"))
@@ -1914,22 +1913,22 @@ object VectorQueries {
     (s, d) =>
       val base = embeddings(s, d).select(col("vec_id"),
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
-        .materialized()
+        .localCheckpoint()
       def asCenter(df: DataFrame) = broadcast(
         df.select(col("vec_id").as("cid"), col("ev").as("ec"), col("nv").as("nc")))
       def dist = lit(1.0) - expr(dotExpr("ev", "ec")) / (col("nv") * col("nc"))
-      val c0 = asCenter(base.orderBy("vec_id").limit(1)).materialized()
+      val c0 = asCenter(base.orderBy("vec_id").limit(1)).localCheckpoint()
       var md = base.crossJoin(c0).select(col("vec_id"), col("ev"), col("nv"),
-        dist.as("md")).materialized()
+        dist.as("md")).localCheckpoint()
       var centers = c0.select(lit(0L).as("pick_order"), col("cid").as("vec_id"),
         lit(null).cast("double").as("radius"))
       for (i <- 1 until KcK) {
-        val next = md.orderBy(col("md").desc, col("vec_id")).limit(1).materialized()
+        val next = md.orderBy(col("md").desc, col("vec_id")).limit(1).localCheckpoint()
         centers = centers.union(next.select(lit(i.toLong).as("pick_order"),
           col("vec_id"), col("md").as("radius")))
         md = md.as("m").crossJoin(asCenter(next))
           .select(col("m.vec_id"), col("m.ev"), col("m.nv"),
-            least(col("m.md"), dist).as("md")).materialized()
+            least(col("m.md"), dist).as("md")).localCheckpoint()
       }
       centers.select(col("pick_order"), col("vec_id"),
         graft.util.Exact.pinScoreInt(col("radius")).as("radius"))
@@ -1963,7 +1962,7 @@ object VectorQueries {
 
   private def classifyFn(graph: Q)(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
-      val g = graph.fn(s, d).select(col("q"), col("c")).materialized(eager = false)
+      val g = graph.fn(s, d).select(col("q"), col("c")).localCheckpoint(eager = false)
       val lv = embeddings(s, d).select(col("vec_id"), col("label"))
       val votes = g.join(lv, col("vec_id") === col("c"))
         .groupBy("q", "label").agg(count(lit(1)).as("votes"))
@@ -2046,7 +2045,7 @@ object VectorQueries {
       val cents = seedCents(base)
       val all = base.select(col("vec_id").as("vid"),
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
-      val withVec = all.join(assignClusters(all, cents), "vid").materialized(eager = false)
+      val withVec = all.join(assignClusters(all, cents), "vid").localCheckpoint(eager = false)
       val a = withVec.select(col("vid").as("va"), col("cluster"),
         col("ev").as("ea"), col("nv").as("na"))
       val b = withVec.select(col("vid").as("vb"), col("cluster"),
@@ -2057,11 +2056,11 @@ object VectorQueries {
           >= lit(DbTau) - lit(1e-6) / (col("na") * col("nb")))
         .filter(expr(dotExpr("ea", "eb")) / (col("na") * col("nb")) >= DbTau)
         .select(col("va"), col("vb"))
-        .materialized(eager = false) // feeds degrees, the core subgraph, and borders
+        .localCheckpoint(eager = false) // feeds degrees, the core subgraph, and borders
       val edges = half.union(half.select(col("vb").as("va"), col("va").as("vb")))
       val deg = edges.groupBy("va").agg(count(lit(1)).as("deg"))
       val cores = deg.filter(col("deg") >= DbMinNbrs).select(col("va").as("vid"))
-        .materialized(eager = false) // read by the subgraph semi-joins AND the anti-join
+        .localCheckpoint(eager = false) // read by the subgraph semi-joins AND the anti-join
       val coreEdges = half
         .join(cores.select(col("vid").as("va")), Seq("va"), "left_semi")
         .join(cores.select(col("vid").as("vb")), Seq("vb"), "left_semi")
@@ -2071,7 +2070,7 @@ object VectorQueries {
       val coreLab = cores
         .join(comp.withColumnRenamed("node", "vid"), Seq("vid"), "left")
         .select(col("vid"), coalesce(col("cluster"), col("vid")).as("cluster"))
-        .materialized(eager = false) // feeds border assignment AND the output union
+        .localCheckpoint(eager = false) // feeds border assignment AND the output union
       val bord = edges
         .join(coreLab.select(col("vid").as("vb"), col("cluster")), "vb")
         .join(cores.select(col("vid").as("va")), Seq("va"), "left_anti")
@@ -2346,7 +2345,7 @@ object VectorQueries {
       val dArr = qd.groupBy("vec_id")
         .agg(expr("transform(array_sort(collect_list(struct(i, de))), p -> p.de)").as("dv"))
         .withColumn("nd", expr("sqrt(decimal_dot(dv, dv))"))
-        .materialized() // queries AND candidates read it
+        .localCheckpoint() // queries AND candidates read it
       val qs = dArr.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q"), col("dv").as("qv"), col("nd").as("nq"))
       val cand = dArr.select(col("vec_id").as("c"), col("dv").as("cv"), col("nd").as("nc"))
@@ -2432,7 +2431,7 @@ object VectorQueries {
           posexplode(col("embedding")).as(Seq("i", "e")))
         .groupBy("label", "half", "i")
         .agg(Exact.exactAvg(col("e").cast("double")).as("m"))
-        .materialized(eager = false) // both join sides
+        .localCheckpoint(eager = false) // both join sides
       val p = m.filter(col("half") === 0)
         .select(col("label"), col("i"), col("m").as("ma"))
         .join(m.filter(col("half") === 1)
@@ -2514,7 +2513,7 @@ object VectorQueries {
         .select(col("vid"), col("cluster"),
           zip_with(col("ev"), col("ecent"),
             (x, c) => x.cast("double") - c.cast("double")).as("rv"))
-        .materialized() // feeds the corpus subspaces AND the codebook
+        .localCheckpoint() // feeds the corpus subspaces AND the codebook
       val subs = resid
         .select(col("vid"), col("cluster"),
           explode(array((0 until 8).map(lit): _*)).as("s"), col("rv"))
@@ -2528,7 +2527,7 @@ object VectorQueries {
         .withColumn("dist2",
           col("ssr") - lit(2) * expr(dotExpr("sub", "cw")) + col("ssc"))
         .select("vid", "cluster", "s", "code", "dist2")
-        .materialized() // feeds encoding AND the query LUTs
+        .localCheckpoint() // feeds encoding AND the query LUTs
       val wEnc = Window.partitionBy("vid", "s").orderBy(col("dist2"), col("code"))
       val enc = d2.withColumn("rn", row_number().over(wEnc)).filter(col("rn") === 1)
         .select("vid", "cluster", "s", "code")
@@ -2578,7 +2577,7 @@ object VectorQueries {
     (s, d) =>
       val edges = annKnnJoin.fn(s, d).select("q", "c")
       val ind = edges.groupBy("c").agg(count(lit(1)).as("in_deg"))
-        .materialized(eager = false) // feeds the histogram AND the coverage count
+        .localCheckpoint(eager = false) // feeds the histogram AND the coverage count
       val hist = ind.groupBy("in_deg").agg(count(lit(1)).as("n_vecs"))
       val tot = embeddings(s, d).agg(count(lit(1)).as("n"))
       val cov = ind.agg(count(lit(1)).as("nc"))
@@ -2639,7 +2638,7 @@ object VectorQueries {
       val k = cents.count()
       val all = base.select(col("vec_id").as("vid"),
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
-      val s2 = hierStage2(all, cents, k).materialized(eager = false)
+      val s2 = hierStage2(all, cents, k).localCheckpoint(eager = false)
       val assign = s2.filter(col("rn") === 1)
         .select(col("vid").as("c"), col("cid").as("cluster"))
       val nps = Seq(1L, 2L, 4L).toDF("nprobe")
@@ -2702,7 +2701,7 @@ object VectorQueries {
       val edges = mutualFn(annKnnJoin)(s, d)
         .select(col("a").as("src"), col("b").as("dst"))
       val comp = graft.ops.Corpus.componentLabels(edges)
-        .materialized(eager = false) // histogram AND coverage count
+        .localCheckpoint(eager = false) // histogram AND coverage count
       val h = comp.groupBy("cluster").agg(count(lit(1)).as("component_size"))
         .groupBy("component_size").agg(count(lit(1)).as("n_components"))
       val tot = embeddings(s, d).agg(count(lit(1)).as("n"))
@@ -2751,7 +2750,7 @@ object VectorQueries {
       " END AS global_cc FROM wd w CROSS JOIN tr t CROSS JOIN eg g") {
     (s, d) =>
       val edges = mutualFn(annKnnJoin)(s, d).select("a", "b")
-        .materialized(eager = false) // feeds degree, wedge closure (twice) and the count
+        .localCheckpoint(eager = false) // feeds degree, wedge closure (twice) and the count
       val deg = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -2804,7 +2803,7 @@ object VectorQueries {
       " END AS assortativity FROM s") {
     (s, d) =>
       val edges = mutualFn(annKnnJoin)(s, d).select("a", "b")
-        .materialized(eager = false) // degrees AND the doubled edge list read it
+        .localCheckpoint(eager = false) // degrees AND the doubled edge list read it
       val deg = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -2851,7 +2850,7 @@ object VectorQueries {
       " AS avg_nbr_deg FROM de GROUP BY 1") {
     (s, d) =>
       val edges = mutualFn(annKnnJoin)(s, d).select("a", "b")
-        .materialized(eager = false) // degrees AND the doubled edge list read it
+        .localCheckpoint(eager = false) // degrees AND the doubled edge list read it
       val deg = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -2979,7 +2978,7 @@ object VectorQueries {
           (expr(dotExpr("ev", "ecent")) / (col("nv") * col("ncent"))).as("cos"))
       val w = Window.partitionBy("vid").orderBy(col("cos").desc, col("cid"))
       val dd = cosAll.withColumn("rn", row_number().over(w))
-        .materialized(eager = false) // rn=1 and rn=2 slices both read it
+        .localCheckpoint(eager = false) // rn=1 and rn=2 slices both read it
       val s1 = dd.filter(col("rn") === 1)
         .select(col("vid"), col("cid").as("cluster"), (lit(1.0) - col("cos")).as("a"))
         .join(dd.filter(col("rn") === 2)
@@ -3045,7 +3044,7 @@ object VectorQueries {
     val all = base.select(col("vec_id").as("vid"), col("label"),
       col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
     val withVec = all.join(assignClustersHier(
-      all.select("vid", "ev", "nv"), cents, k), "vid").materialized()
+      all.select("vid", "ev", "nv"), cents, k), "vid").localCheckpoint()
     val a = withVec.select(col("vid").as("q"), col("cluster"),
       col("label").as("ql"), col("ev").as("eq"), col("nv").as("nq"))
     val b = withVec.select(col("vid").as("c"), col("cluster"),
@@ -3079,7 +3078,7 @@ object VectorQueries {
       val best = tcos.withColumn("same", col("cl") === col("ql"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(col("q"), col("c"), col("cosine"), col("same"))
-        .materialized() // the pos and neg slices read the same ranked frame
+        .localCheckpoint() // the pos and neg slices read the same ranked frame
       val pos = best.filter(col("same"))
         .select(col("q"), col("c").as("pos_id"), col("cosine").as("pos_cos"))
       val neg = best.filter(!col("same"))
@@ -3128,7 +3127,7 @@ object VectorQueries {
       "LEFT JOIN pos p ON p.q = e.vec_id LEFT JOIN sneg s ON s.q = e.vec_id") {
     (s, d) =>
       val base = embeddings(s, d)
-      val tcos = tripletPairs(s, d).materialized() // pos rank AND band read it
+      val tcos = tripletPairs(s, d).localCheckpoint() // pos rank AND band read it
       val wq = Window.partitionBy("q").orderBy(col("cosine").desc, col("c"))
       val pos = tcos.filter(col("cl") === col("ql"))
         .withColumn("rn", row_number().over(wq)).filter(col("rn") === 1)
@@ -3210,17 +3209,17 @@ object VectorQueries {
       s"(s$KcoreRounds.node IS NOT NULL) AS in_core FROM deg0 d $joins"
   }) {
     (s, d) =>
-      val edges0 = mutualFn(annKnnJoin)(s, d).select("a", "b").materialized(eager = false)
+      val edges0 = mutualFn(annKnnJoin)(s, d).select("a", "b").localCheckpoint(eager = false)
       def degrees(e: DataFrame): DataFrame =
         e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
           .groupBy("node").agg(count(lit(1)).as("deg"))
       def peel(e: DataFrame): (DataFrame, DataFrame) = {
         val surv = degrees(e).filter(col("deg") >= 2).select("node")
-          .materialized(eager = false) // both endpoint semi-joins + the report
+          .localCheckpoint(eager = false) // both endpoint semi-joins + the report
         val kept = e.join(surv.select(col("node").as("a")), Seq("a"), "semi")
           .join(surv.select(col("node").as("b")), Seq("b"), "semi")
           .select("a", "b")
-        (surv, kept.materialized())
+        (surv, kept.localCheckpoint())
       }
       val deg0 = degrees(edges0).withColumnRenamed("deg", "deg0")
       val survivors = Seq.iterate((edges0, edges0, 0), KcoreRounds + 1) {
@@ -3275,10 +3274,10 @@ object VectorQueries {
   }) {
     (s, d) =>
       val edges = mutualFn(annKnnJoin)(s, d).select("a", "b")
-        .materialized(eager = false) // the doubled frame reads it twice
+        .localCheckpoint(eager = false) // the doubled frame reads it twice
       val du = edges
         .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-        .materialized(eager = false) // every round joins it
+        .localCheckpoint(eager = false) // every round joins it
       var lbl = du.select(col("a").as("node")).distinct()
         .withColumn("lbl", col("node"))
       for (_ <- 1 to LabelPropRounds) {
@@ -3287,7 +3286,7 @@ object VectorQueries {
         val w = Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))
         lbl = cnt.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select("node", "lbl")
-          .materialized(eager = false) // bound the per-round plan (q_dedup_cluster lesson)
+          .localCheckpoint(eager = false) // bound the per-round plan (q_dedup_cluster lesson)
       }
       lbl.groupBy(col("lbl").as("community"))
         .agg(count(lit(1)).cast("long").as("n_members"))
@@ -3354,17 +3353,17 @@ object VectorQueries {
       val qs = base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"),
           expr(normExpr("embedding")).as("qn"))
-        .materialized(eager = false) // joined every hop
+        .localCheckpoint(eager = false) // joined every hop
       def withCos(df: DataFrame): DataFrame =
         df.distinct().join(broadcast(qs), "qid").join(all, "node")
           .select(col("qid"), col("node"),
             (expr(dotExpr("qe", "ce")) / (col("qn") * col("cn"))).as("cos"))
-      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").materialized(eager = false)
+      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").localCheckpoint(eager = false)
       val du = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-        .materialized(eager = false)
+        .localCheckpoint(eager = false)
       val start = du.agg(min("a").as("node"))
       var cur = withCos(qs.select("qid").crossJoin(broadcast(start)))
-        .withColumn("hops", lit(0L)).materialized(eager = false)
+        .withColumn("hops", lit(0L)).localCheckpoint(eager = false)
       for (_ <- 1 to GraphWalkHops) {
         // r15 (§2.4): the hop count rides THROUGH the union instead of a
         // per-hop join back to the previous frontier. A candidate row can
@@ -3386,7 +3385,7 @@ object VectorQueries {
         val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("node"))
         cur = u.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select(col("qid"), col("node"), col("cos"), col("hops"))
-          .materialized(eager = false) // bound the per-hop plan
+          .localCheckpoint(eager = false) // bound the per-hop plan
       }
       cur.select(col("qid"), col("node").as("best_node"),
         graft.util.Exact.pinScoreInt(col("cos")).as("best_cos"),
@@ -3414,7 +3413,7 @@ object VectorQueries {
         "CAST(sum(same) AS DOUBLE) / CAST(count(*) AS DOUBLE)") + " AS purity " +
       "FROM e GROUP BY 1") {
     (s, d) =>
-      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").materialized(eager = false)
+      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").localCheckpoint(eager = false)
       val du = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       val lab = embeddings(s, d).select(col("vec_id"), col("label"))
       du.join(lab.select(col("vec_id").as("a"), col("label")), "a")
@@ -3457,7 +3456,7 @@ object VectorQueries {
         .select(col("label"), col("pos").as("i"), col("col").cast("double").as("e"))
       val m = v.groupBy("label", "i")
         .agg((Exact.exactSum(col("e")) / count(col("e"))).as("m"))
-        .materialized(eager = false) // norms AND the pair join read it
+        .localCheckpoint(eager = false) // norms AND the pair join read it
       val nm = m.groupBy("label")
         .agg(sqrt(Exact.portableSum(col("m") * col("m"))).as("nrm"))
       val p = m.as("a")
@@ -3537,7 +3536,7 @@ object VectorQueries {
       "JOIN deg da ON da.node = ne.u JOIN deg db ON db.node = ne.w") {
     (s, d) =>
       val edges = mutualFn(annKnnJoin)(s, d).select("a", "b")
-        .materialized(eager = false) // wedges, the non-edge screen, and degrees read it
+        .localCheckpoint(eager = false) // wedges, the non-edge screen, and degrees read it
       val du = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
       val deg = du.groupBy(col("a").as("node")).agg(count(lit(1)).as("deg"))
       val cn = du.as("d1")
@@ -3587,7 +3586,7 @@ object VectorQueries {
       " END AS local_cc FROM deg d LEFT JOIN tn t ON t.node = d.node") {
     (s, d) =>
       val edges = mutualFn(annKnnJoin)(s, d).select("a", "b")
-        .materialized(eager = false) // degree frame + both wedge joins
+        .localCheckpoint(eager = false) // degree frame + both wedge joins
       val deg = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -3631,7 +3630,7 @@ object VectorQueries {
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
         .groupBy("deg").agg(count(lit(1)).as("n_nodes"))
-        .materialized(eager = false) // the total AND the output read it
+        .localCheckpoint(eager = false) // the total AND the output read it
       val t = h.agg(sum("n_nodes").cast("long").as("tot"))
       h.crossJoin(broadcast(t))
         .select(col("deg"), col("n_nodes"),
@@ -3681,19 +3680,19 @@ object VectorQueries {
       s"FROM deg d $joins"
   }) {
     (s, d) =>
-      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").materialized(eager = false)
+      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").localCheckpoint(eager = false)
       val adj = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-        .materialized(eager = false) // every round joins it
+        .localCheckpoint(eager = false) // every round joins it
       val deg = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-      val f0 = deg.agg(min("node").as("node")).materialized(eager = false)
+      val f0 = deg.agg(min("node").as("node")).localCheckpoint(eager = false)
       val frontiers = (1 to BfsRounds).foldLeft(Seq(f0)) { (fs, _) =>
         val visited = fs.reduce(_ unionAll _)
         val next = adj.join(fs.last.withColumnRenamed("node", "a"), "a")
           .select(col("b").as("node")).distinct()
           .join(visited, Seq("node"), "left_anti")
-          .materialized(eager = false)
+          .localCheckpoint(eager = false)
         fs :+ next
       }
       val joined = frontiers.zipWithIndex.foldLeft(deg) { case (acc, (f, i)) =>
@@ -3772,7 +3771,7 @@ object VectorQueries {
     (s, d) =>
       val (_, enc) = pqPlainEncode(s, d)
       val cs = enc.groupBy("s", "code").agg(count(lit(1)).as("n_vecs"))
-        .materialized(eager = false) // the subspace totals AND the output
+        .localCheckpoint(eager = false) // the subspace totals AND the output
       val ts = cs.groupBy("s").agg(sum("n_vecs").cast("long").as("n"))
       cs.join(broadcast(ts), "s")
         .select(col("s"), col("code"), col("n_vecs"),
@@ -3820,13 +3819,13 @@ object VectorQueries {
       val all = base.select(col("vec_id").as("vid"),
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
       val assign = assignClustersHier(all, cents, k)
-      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").materialized(eager = false)
+      val edges = mutualFn(annKnnJoin)(s, d).select("a", "b").localCheckpoint(eager = false)
       val mm = edges.agg(count(lit(1)).as("m"))
       val deg = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
       val nc = deg.join(assign.withColumnRenamed("vid", "node"), "node")
-        .materialized(eager = false) // both endpoints AND the cluster fold
+        .localCheckpoint(eager = false) // both endpoints AND the cluster fold
       val ein = edges
         .join(nc.select(col("node").as("a"), col("cluster").as("ca")), "a")
         .join(nc.select(col("node").as("b"), col("cluster").as("cb")), "b")
@@ -3883,7 +3882,7 @@ object VectorQueries {
       val all = base.select(col("vec_id").as("vid"),
         col("embedding").as("ev"), expr(normExpr("embedding")).as("nv"))
       val assign = assignClustersHier(all, cents, k)
-      val withVec = all.join(assign, "vid").materialized(eager = false)
+      val withVec = all.join(assign, "vid").localCheckpoint(eager = false)
       val a = withVec.select(col("vid").as("q"), col("cluster"),
         col("ev").as("eq"), col("nv").as("nq"))
       val b = withVec.select(col("vid").as("c"), col("cluster"),
@@ -3894,7 +3893,7 @@ object VectorQueries {
           expr(dotExpr("eq", "ec")) / (col("nq") * col("nc"))) * 5.0).cast("long"))
           .as("bin"))
         .groupBy("bin").agg(count(lit(1)).as("n_pairs"))
-        .materialized(eager = false) // the total AND the output read it
+        .localCheckpoint(eager = false) // the total AND the output read it
       val t = h.agg(sum("n_pairs").cast("long").as("tot"))
       h.crossJoin(broadcast(t))
         .select(col("bin"), (col("bin") / 5.0).as("bin_lo"), col("n_pairs"),
@@ -3932,11 +3931,11 @@ object VectorQueries {
     (s, d) =>
       import s.implicits._
       val pc = dedupEmbedCosine.fn(s, d)
-        .materialized(eager = false) // both rollups read it
+        .localCheckpoint(eager = false) // both rollups read it
       val thr = Seq(35, 50, 65, 80, 90, 95).toDF("thr_pct")
       val f = pc.crossJoin(broadcast(thr))
         .filter(col("cosine") >= col("thr_pct").cast("double") / 100.0)
-        .materialized(eager = false) // pair AND doc rollups
+        .localCheckpoint(eager = false) // pair AND doc rollups
       val g1 = f.groupBy("thr_pct").agg(count(lit(1)).as("n_pairs"))
       val u = f.select(col("thr_pct"), col("va").as("vid"))
         .union(f.select(col("thr_pct"), col("vb").as("vid"))).distinct()
@@ -3989,7 +3988,7 @@ object VectorQueries {
         .join(lab.select(col("vec_id").as("a"), col("label").as("label_a")), Seq("a"))
         .join(lab.select(col("vec_id").as("b"), col("label").as("label_b")), Seq("b"))
         .select("label_a", "label_b")
-        .materialized(eager = false) // volume, cut AND the total read it
+        .localCheckpoint(eager = false) // volume, cut AND the total read it
       val m2 = el.agg((count(lit(1)) * 2).cast("long").as("vol_all"))
       val cFlag = when(col("label_a") =!= col("label_b"), 1L).otherwise(0L)
       val u = el.select(col("label_a").as("label"), cFlag.as("c"))
@@ -4070,7 +4069,7 @@ object VectorQueries {
       val dArr = base.select(col("vec_id"),
           expr("transform(slice(embedding, 1, 8), x -> CAST(x AS DOUBLE))").as("dv"))
         .withColumn("nd", expr("sqrt(decimal_dot(dv, dv))"))
-        .materialized() // queries AND candidates read it
+        .localCheckpoint() // queries AND candidates read it
       val qs = dArr.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q"), col("dv").as("qv"), col("nd").as("nq"))
       val cand = dArr.select(col("vec_id").as("c"), col("dv").as("cv"), col("nd").as("nc"))
@@ -4180,11 +4179,11 @@ object VectorQueries {
       " END AS phi FROM nk JOIN ek ON ek.k = nk.k") {
     (s, d) =>
       val edges = mutualFn(annKnnJoin)(s, d).select("a", "b")
-        .materialized(eager = false) // degrees AND the min-degree edge frame read it
+        .localCheckpoint(eager = false) // degrees AND the min-degree edge frame read it
       val deg = edges.select(col("a").as("node"))
         .unionAll(edges.select(col("b").as("node")))
         .groupBy("node").agg(count(lit(1)).as("deg"))
-        .materialized(eager = false) // histogram, k-grid AND both edge joins
+        .localCheckpoint(eager = false) // histogram, k-grid AND both edge joins
       val em = edges
         .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
         .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))

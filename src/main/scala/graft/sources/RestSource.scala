@@ -279,27 +279,12 @@ private[sources] final class RestReaderFactory(required: StructType,
         r == null || r.length != fullNames.length ||
           nonNullable.exists(i => r(i) == null)
       new PartitionReader[InternalRow] {
-        // the fetch runs ONCE, inside the same retry/backoff contract as
-        // ChunkedFetch.fetchPartitioned: a partition that fails retries
-        // alone; a partition that succeeds pays the courtesy throttle
-        private lazy val it: Iterator[Seq[Any]] = {
-          var attempt = 0
-          var out: Option[Vector[Seq[Any]]] = None
-          var last: Throwable = null
-          while (out.isEmpty && attempt <= maxRetries) {
-            if (attempt > 0) Thread.sleep(backoffMs << (attempt - 1))
-            try out = Some(rows().toVector)
-            catch {
-              case e: InterruptedException =>
-                Thread.currentThread().interrupt(); throw e
-              case scala.util.control.NonFatal(e) => last = e
-            }
-            attempt += 1
-          }
-          if (out.isDefined && throttleMs > 0) Thread.sleep(throttleMs)
-          out.getOrElse(throw new IllegalStateException(
-            s"graft-rest partition failed after $attempt attempts", last)).iterator
-        }
+        // the fetch runs ONCE, under ChunkedFetch's retry/backoff contract:
+        // a partition that fails retries alone; a partition that succeeds
+        // pays the courtesy throttle
+        private lazy val it: Iterator[Seq[Any]] =
+          ChunkedFetch.withRetry(throttleMs, maxRetries, backoffMs)(rows())(attempts =>
+            s"graft-rest partition failed after $attempts attempts").iterator
         private var current: Seq[Any] = _
         private var skipped = 0L
         override def next(): Boolean = {

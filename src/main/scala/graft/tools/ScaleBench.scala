@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import graft.SparkEntry
 
 /** Scaling-cadence runner (VERDICT r7 #8): the sf1 re-measurement
@@ -102,7 +104,7 @@ object ScaleBench {
         (json + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable => System.err.println(s"[scalebench] tee failed: $e") }
+    } catch { case NonFatal(e) => System.err.println(s"[scalebench] tee failed: $e") }
     println(json)
     spark.stop()
   }

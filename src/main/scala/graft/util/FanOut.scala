@@ -25,10 +25,6 @@ import org.apache.spark.sql.DataFrame
   * here is a stage with no shuffle in it at all.
   */
 object FanOut {
-  /** `spark.graft.fanout` = `auto` (default) | `off` — the A/B gate for
-    * benchmarking the guard itself; `off` restores the bare scan. */
-  val Key = "spark.graft.fanout"
-
   /** Repartition `df` to the default parallelism iff its current plan
     * yields fewer than half that many partitions. Inspecting
     * `rdd.getNumPartitions` forces physical planning but runs no job.
@@ -50,7 +46,6 @@ object FanOut {
     * spreads evenly whenever the key is near-unique (doc_id, the
     * lineitem ordinal). */
   def apply(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    if (df.sparkSession.conf.get(Key, "auto") == "off") return df
     val slots = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 <= slots) df.repartition(slots, key) else df
   }

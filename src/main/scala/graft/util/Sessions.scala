@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale rationale (targets a 1000-executor cluster; locally one core
   * per available processor unless SPARK_GRAFT_CPUS says otherwise):
-  * - shuffle.partitions = cores locally; at cluster scale set ~2-3× total
-  *   cores and let AQE coalesce — AQE is ON here for the same reason.
+  * - shuffle.partitions = 2× the session's cores (see [[shuffleParts]])
+  *   and AQE ON to coalesce the small ones back.
   * - WindowExec/SMJ buffers: Spark spills window/join buffers to disk
   *   after 4096 rows per partition — pathological for month-partitioned
   *   windows where a task legitimately holds 10⁴-10⁶ rows. We raise the
@@ -29,18 +29,17 @@ object Sessions {
     * stage tail without 4×'s task overhead; 4× eliminates the spill but
     * pays ~2× wall for it (in one 16 GB local JVM, spill is a cheap
     * page-cache round trip — guide §5 "some spill is fine"). The value
-    * scales with the session's cores, not this machine; a memory-tight
-    * cluster that would rather trade wall for spill sets
-    * SPARK_GRAFT_SHUFFLE_PARTS. */
+    * scales with the session's cores, not this machine. */
   private def shuffleParts(cores: String): String = {
     val c = try math.max(1, cores.toInt) catch {
       case _: NumberFormatException => Runtime.getRuntime.availableProcessors()
     }
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", (2 * c).toString)
+    (2 * c).toString
   }
 
-  def builder(cores: String): SparkSession.Builder =
-    SparkSession.builder()
+  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shuffleParts(cores))
       .config("spark.ui.enabled", "false")
@@ -60,18 +59,13 @@ object Sessions {
       // execution after the first hundred entries evict — pure fixed
       // overhead per query in any long-lived session (a production driver
       // serving a query mix hits the identical thrash; this is not a
-      // bench-shape knob). Sized to hold the full registry's fragments;
-      // override via SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
+      // bench-shape knob). Sized to hold the full registry's fragments.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.sql.windowExec.buffer.in.memory.threshold", "4194304")
       .config("spark.sql.windowExec.buffer.spill.threshold", "2147483647")
       .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "4194304")
       .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "2147483647")
-
-  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)): SparkSession = {
-    val s = builder(cores).getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // engine-native functions available to expr()/SQL in every session
     graft.functions.DecimalDot.register(s)

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Hand-computed semantics for the pipeline modules (quality gate,
-  * canonical merge, taxonomy, integrity stats, recursive kernels). */
+  * canonical merge, taxonomy, integrity stats, recursive kernels), the
+  * FanOut guard and the session's pinned engine values. */
 class OpsSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
@@ -275,5 +276,28 @@ class OpsSpec extends SparkSpec {
     val nr = Seq((0L, null: String)).toDF("id", "text")
       .select(graft.ops.TextOps.normalizeText(col("text"))).collect().head
     assert(nr.isNullAt(0))
+  }
+
+  test("FanOut widens a narrow frame by hash on the key, to defaultParallelism") {
+    val slots = spark.sparkContext.defaultParallelism
+    val narrow = spark.range(0, 100, 1, 1).toDF("id")
+    assert(narrow.rdd.getNumPartitions * 2 <= slots)
+    val out = graft.util.FanOut(narrow, col("id"))
+    assert(out.rdd.getNumPartitions == slots)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.contains("hashpartitioning(id#"), plan)
+    assert(!plan.contains("RoundRobinPartitioning"), plan)
+    assert(out.count() == 100)
+  }
+
+  test("FanOut returns an already-wide frame unchanged") {
+    val slots = spark.sparkContext.defaultParallelism
+    val wide = spark.range(0, 100, 1, slots).toDF("id")
+    assert(graft.util.FanOut(wide, col("id")) eq wide)
+  }
+
+  test("Sessions.local pins shuffle width at 2x cores and the codegen cache at 8192") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "8")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192")
   }
 }

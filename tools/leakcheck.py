@@ -52,8 +52,7 @@ CATEGORIES = {
 }
 ALLOWED_ENV = {
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_TEE", "SPARK_GRAFT_CPUS",
-    "SPARK_GRAFT_VERIFY_PAR", "SPARK_GRAFT_BENCH_ONLY",
-    "SPARK_GRAFT_SHUFFLE_PARTS",  # r15: scale-adaptive shuffle-width knob
+    "SPARK_GRAFT_VERIFY_PAR",
     "SPARK_DRIVER_MEM", "GRAFT_EXPLAIN", "COURSIER_MODE", "PATH", "HOME", "UTF",
 }
 # Package ROOTS that mark a real external dependency; imports whose first
