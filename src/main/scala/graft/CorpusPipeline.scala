@@ -67,11 +67,12 @@ object CorpusPipeline {
     val bronze = lake.read("bronze", "documents")
 
     log("step 2/7: line cleanup + exact (normalized) + near-dup dedup -> silver")
-    // read three times (count, cluster input, keeper anti-join): persist
+    // read three times (count, cluster input, keeper anti-join): persist,
+    // and release it however the step ends
     val exact = Corpus.exactDedup(Corpus.dedupLines(bronze), normalized = true).persist()
-    val afterExact = exact.count()
-    val afterNearDup = lake.write(Corpus.nearDupDedup(exact), "silver", "deduped").rows
-    exact.unpersist()
+    val (afterExact, afterNearDup) =
+      try (exact.count(), lake.write(Corpus.nearDupDedup(exact), "silver", "deduped").rows)
+      finally exact.unpersist()
 
     log("step 3/7: repetition + entropy quality gate")
     // the gate's own count trips the breaker before the layer is written
@@ -86,10 +87,10 @@ object CorpusPipeline {
     lake.write(quality, "silver", "quality")
 
     log("step 4/7: benchmark contamination gate")
-    val (clean, removedByContamination) =
-      Corpus.contaminationFilter(lake.read("silver", "quality"),
-        benchSource, maxContamFrac)
+    val (clean, contam) = Corpus.contaminationFilter(lake.read("silver", "quality"),
+      benchSource, maxContamFrac)
     lake.write(clean, "silver", "clean")
+    val removedByContamination = contam.get(Corpus.ContamFlagged).asInstanceOf[Long]
 
     log("step 5/7: PII redaction")
     val (redacted, pii) = Corpus.redactPii(lake.read("silver", "clean"))

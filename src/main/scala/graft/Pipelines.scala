@@ -86,14 +86,15 @@ object Pipelines {
 
     // 5. Derivatives-style daily snapshot: idempotent partition append of
     //    the latest day (derivatives_snapshot_etl.py:48-56), cut from the
-    //    silver artifact rather than a recomputed silver lineage.
+    //    silver artifact rather than a recomputed silver lineage. An empty
+    //    silver has no latest day and writes no snapshot.
     log("step 5/5: daily snapshot -> derivatives")
-    val latest = silverOut[String]("latest")
-    val snap = lake.read("silver", "historical")
-      .withColumn("snap_date", date_format(col("date"), "yyyy-MM-dd"))
-      .filter(col("snap_date") === latest)
-    val wrote = lake.writeSnapshotIfAbsent(snap, "derivatives", "daily",
-      "snap_date", latest)
+    val wrote = Option(silverOut[String]("latest")).exists { latest =>
+      val snap = lake.read("silver", "historical")
+        .withColumn("snap_date", date_format(col("date"), "yyyy-MM-dd"))
+        .filter(col("snap_date") === latest)
+      lake.writeSnapshotIfAbsent(snap, "derivatives", "daily", "snap_date", latest)
+    }
 
     log("all pipelines completed successfully")
     Summary(universeRows, bronzeRows, silverOut.rows, goldRows, gate.removed, wrote)

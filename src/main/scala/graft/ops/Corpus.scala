@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -67,22 +69,62 @@ object Corpus {
     * published score is bit-stable across engines, partitionings, and
     * oracle-engine versions (see Exact's PinGrid scaladoc for why the
     * earlier decimal-sum form drifted on transcendental addends). */
-  def tokenEntropy(docs: DataFrame): DataFrame = {
-    val tf = TextOps.explodeTokens(docs).groupBy("doc_id", "word")
-      .agg(count(lit(1)).as("tf"))
-    val perDoc = graft.util.Portable.pln(tf, col("tf").cast("double"), "lntf")
+  def tokenEntropy(docs: DataFrame): DataFrame =
+    withEntropy(textStats(docs, bigrams = false))
+      .select(col("doc_id"), col("n_tokens").as("dl"), col("entropy"))
+
+  /** Per-document counts from ONE (doc_id, kind, unit) count aggregate
+    * over a document's words (kind 0) and, with `bigrams`, its word
+    * bigrams (kind 1): n_tokens = Σ tf, n_distinct = the number of
+    * distinct words, `s` = Σ tf·pln(tf) on the binary grid (the entropy
+    * numerator), and n_bigrams, top_bigram_n and dup_bigram_n, which are
+    * null for a document with fewer than two tokens. Callers that do not
+    * read a column have it pruned from the plan. */
+  private def textStats(docs: DataFrame, bigrams: Boolean): DataFrame = {
+    val pos = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("sp"))
+      .select(col("doc_id"), col("sp"), posexplode(col("sp")).as(Seq("i", "word")))
+    val units =
+      if (!bigrams) pos.select(col("doc_id"), lit(0).as("kind"), col("word").as("unit"))
+      else pos.select(col("doc_id"), stack(lit(2), lit(0), col("word"), lit(1),
+          when(col("i") + 1 < size(col("sp")),
+            concat(col("word"), lit(" "), element_at(col("sp"), col("i") + 2))))
+          .as(Seq("kind", "unit")))
+        .filter(col("unit").isNotNull)
+    val isWord = col("kind") === 0
+    val isBigram = col("kind") === 1
+    val tf = units.groupBy("doc_id", "kind", "unit").agg(count(lit(1)).as("c"))
+    graft.util.Portable.pln(tf, when(isWord, col("c").cast("double")), "lntf")
       .groupBy("doc_id")
-      .agg(graft.util.Exact.portableSum(col("tf").cast("double") * col("lntf")).as("s"),
-        sum("tf").as("dl"))
-    graft.util.Portable.pln(perDoc, col("dl").cast("double"), "lndl")
-      .select(col("doc_id"), col("dl"),
-        graft.util.Exact.pinScore(col("lndl") - (col("s") / col("dl").cast("double")))
-          .as("entropy"))
+      .agg(sum(when(isWord, col("c"))).as("n_tokens"), count_if(isWord).as("n_distinct"),
+        graft.util.Exact.portableSum(col("c").cast("double") * col("lntf")).as("s"),
+        sum(when(isBigram, col("c"))).as("n_bigrams"),
+        max(when(isBigram, col("c"))).as("top_bigram_n"),
+        sum(when(isBigram, when(col("c") > 1, col("c")).otherwise(0L))).as("dup_bigram_n"))
   }
+
+  /** [[textStats]] plus the pinned `entropy` column of [[tokenEntropy]]. */
+  private def withEntropy(stats: DataFrame): DataFrame =
+    graft.util.Portable.pln(stats, col("n_tokens").cast("double"), "lndl")
+      .withColumn("entropy", graft.util.Exact.pinScore(
+        col("lndl") - (col("s") / col("n_tokens").cast("double"))))
+      .drop("lndl")
 
   /** Connected-component labels over the MinHash-LSH candidate graph:
     * (doc_id, cluster) for every document that appears in at least one
-    * candidate pair; cluster = min doc_id of the component.
+    * candidate pair; cluster = min doc_id of the component. The algorithm,
+    * stop rule and round bound are [[componentLabels]]'s. */
+  def clusterLabels(docs: DataFrame, maxRounds: Int = 32): DataFrame = {
+    val pairs = TextOps.minhashPairs(docs)
+    componentLabels(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")),
+        maxRounds)
+      .select(col("node").as("doc_id"), col("cluster"))
+  }
+
+  /** Star-contraction connected components over an arbitrary undirected
+    * edge list (columns `src`, `dst`, any orientation, self loops and
+    * duplicates ignored): (node, cluster) for every node that appears in
+    * at least one edge; cluster = min node id of the component.
+    * [[clusterLabels]] and DBSCAN's core-graph clustering call this.
     *
     * Algorithm: alternating large-star / small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC '14) — round
@@ -91,96 +133,73 @@ object Corpus {
     * duplicate chains (mirror families, boilerplate drift) are exactly
     * the components a 100 TB corpus has, so diameter-bound rounds are
     * the scale risk; star-contraction collapses them geometrically.
-    * Each phase is one min-aggregate plus one equi-join on the node key;
-    * per-round localCheckpoint keeps the plan bounded (DESIGN.md §2).
+    * Each phase is one window over the edges of a node (one shuffle on
+    * the node key, no join); per-round localCheckpoint keeps the plan
+    * bounded (DESIGN.md §2).
     *
-    * Convergence = edge-set fixpoint: a (count, Σsrc, Σdst) checksum
-    * gates the rounds, and the round it stabilizes an EXACT set-equality
-    * check (equal counts + one-sided exceptAll empty) confirms — so
-    * convergence is never declared on a checksum collision, matching the
-    * throw-on-no-convergence contract below. */
-  def clusterLabels(docs: DataFrame, maxRounds: Int = 32): DataFrame = {
-    val pairs = TextOps.minhashPairs(docs)
-    componentLabels(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")),
-        maxRounds)
-      .select(col("node").as("doc_id"), col("cluster"))
-  }
-
-  /** Generic star-contraction connected components over an arbitrary
-    * undirected edge list (columns `src`, `dst`, any orientation, self
-    * loops ignored): (node, cluster) for every node that appears in at
-    * least one edge; cluster = min node id of the component. The
-    * algorithm, convergence gate, and round bound are [[clusterLabels]]'s
-    * (which delegates here); DBSCAN's core-graph clustering reuses this
-    * directly. */
+    * Stop rule: the rounds end at the first round whose output is a star
+    * forest — no node is both a `src` and a `dst`, and every `src` has
+    * exactly one edge. A star forest is the algorithm's fixpoint (both
+    * phases map it to itself) and already carries the answer: every leaf
+    * points at its star's center, which is the component minimum. The
+    * test rides on the adjacency window the next large-star reads anyway,
+    * so each round has one action and the labels come from that window.
+    * Both phases and the test are blind to duplicate edges (min, max, and
+    * one emission per distinct neighbor), so no round needs a distinct.
+    * Throws if `maxRounds` rounds do not reach a star forest (the labels
+    * would be wrong). */
   def componentLabels(edges: DataFrame, maxRounds: Int = 32): DataFrame = {
+    // a node's edge rows in neighbor order: `prev` is the neighbor on the
+    // row before (null on the node's first row), so `prev <=> dst` marks a
+    // duplicate of the row before
+    val byNode = Window.partitionBy("src").orderBy("dst")
+    val whole = byNode.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val prev = lag("dst", 1).over(byNode).as("prev")
+    val fresh = !(col("prev") <=> col("dst"))
+    // every (u, neighbor) row of the symmetric adjacency carries u's
+    // m = min(N(u) ∪ {u}) and whether u breaks the star-forest shape: it
+    // has a smaller neighbor (so it is a src) and a second distinct one
+    // (a second edge, or an edge in which it is the dst)
+    def adjacency(e: DataFrame): DataFrame = {
+      val mn = min("dst").over(whole)
+      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+        .select(col("src"), col("dst"), least(col("src"), mn).as("m"),
+          (mn < col("src") && max("dst").over(whole) > mn).as("not_star"), prev)
+    }
+    // Lazy checkpoints throughout: each round's one action (the star-forest
+    // test) materializes the blocks. Under AQE a lazy localCheckpoint still
+    // runs every shuffle stage of its plan at the call; only the last stage
+    // waits for the action.
+    @tailrec
+    def contract(adj: DataFrame, round: Int): DataFrame = {
+      // large-star: every node u re-links its LARGER neighbors to m(u);
+      // output stays larger → smaller (v > u ≥ m)
+      val large = adj.filter(col("dst") > col("src") && fresh)
+        .select(col("dst").as("src"), col("m").as("dst"))
+      // small-star: every node u re-links its (all smaller) neighbors and
+      // itself to m = min(N(u)), once each; orientation again preserved
+      // (v ≥ m)
+      val small = large.select(col("src"), col("dst"), min("dst").over(whole).as("m"), prev)
+        .select(stack(lit(2), col("dst"), col("m"), fresh && col("dst") =!= col("m"),
+          col("src"), col("m"), col("prev").isNull).as(Seq("src", "dst", "keep")))
+        .filter(col("keep")).drop("keep")
+      val next = adjacency(small).localCheckpoint(eager = false)
+      if (next.agg(count_if(col("not_star"))).head().getLong(0) == 0L)
+        // in a star forest m is the leaf's center, or the center itself
+        next.filter(col("prev").isNull).select(col("src").as("node"), col("m").as("cluster"))
+      else if (round + 1 >= maxRounds)
+        throw new IllegalStateException(
+          s"componentLabels did not converge in $maxRounds rounds — the star " +
+            "contraction should need O(log n); raise maxRounds (labels would " +
+            "be wrong)")
+      else contract(next, round + 1)
+    }
     // star edges oriented larger → smaller (src > dst always)
-    // r15 (guide §1.2: fewer driver-blocking actions in iterative ops):
-    // LAZY checkpoints throughout — the per-round `chk` action is the
-    // first consumer and materializes the round's frame as a side effect,
-    // so an eager localCheckpoint here was one extra full job per round
-    // (rounds × ~0.4 s of pure stage latency at sf0.1 across cc_sizes /
-    // DBSCAN / dedup-cluster carriers). Lineage still truncates at the
-    // checkpoint; results are byte-identical.
-    var e = edges
+    contract(adjacency(edges
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct().localCheckpoint(eager = false)
-    def chk(df: DataFrame): (Long, Long, Long) = {
-      val r = df.agg(count(lit(1)), sum("src"), sum("dst")).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    var prev = chk(e)
-    var converged = prev._1 == 0L
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // large-star: every node u re-links its LARGER neighbors to
-      // m = min(N(u) ∪ {u}); needs the symmetric adjacency for the min.
-      // Output stays larger → smaller (dst > u ≥ m).
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      val mLarge = sym.groupBy("src").agg(min("dst").as("mn"))
-        .select(col("src"), least(col("src"), col("mn")).as("m"))
-      // r15 (§2.4, fewer exchanges per round — rounds × carriers pay it):
-      //   - the probe side is written as reversed(e) directly: e is
-      //     invariantly oriented src > dst, so sym.filter(dst > src)
-      //     keeps exactly the reversed branch of the union — same rows,
-      //     half the scan and no filter over the 2× union;
-      //   - the mid-phase distinct() is DROPPED: min() is multiplicity-
-      //     blind, the end-of-round distinct restores set semantics, and
-      //     the convergence checksum reads the post-distinct frame — the
-      //     edge SET per round (and so the round count, the fixpoint and
-      //     the labels) is bit-identical, one full shuffle cheaper.
-      val large = e.select(col("dst").as("src"), col("src").as("dst"))
-        .join(mLarge, "src")
-        .select(col("dst").as("src"), col("m").as("dst"))
-      // small-star: every node u re-links its (all smaller) neighbors and
-      // itself to m = min(N(u)); orientation again preserved (v ≥ m).
-      val mSmall = large.groupBy("src").agg(min("dst").as("m"))
-      val next = large.join(mSmall, "src")
-        .filter(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .union(mSmall.select(col("src"), col("m").as("dst")))
-        .distinct()
-        .localCheckpoint(eager = false)
-      val cur = chk(next)
-      converged = cur == prev && next.exceptAll(e).isEmpty
-      e = next
-      prev = cur
-      rounds += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"componentLabels did not converge in $maxRounds rounds — the star " +
-          "contraction should need O(log n); raise maxRounds (labels would " +
-          "be wrong)")
-    // fixpoint is a star forest: every non-root node appears exactly once
-    // as src pointing at its component min; roots label themselves
-    e.select(col("src").as("node"), col("dst").as("cluster"))
-      .union(e.select(col("dst")).distinct()
-        .select(col("dst").as("node"), col("dst").as("cluster")))
+      .localCheckpoint(eager = false)), 0)
   }
 
   /** Near-duplicate keeper filter: keep every unclustered document plus
@@ -203,36 +222,36 @@ object Corpus {
     * (q_text_repetition is a straight select over this): (doc_id,
     * n_tokens, n_distinct, dup_token_frac, top_bigram_frac,
     * dup_bigram_frac). Integer counts, one division per fraction. */
-  def repetitionSignals(docs: DataFrame): DataFrame = {
-    val ts = TextOps.explodeTokens(docs).groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"), countDistinct("word").as("n_distinct"))
-    val bgs = TextOps.bigrams(docs).groupBy("doc_id", "bigram")
-      .agg(count(lit(1)).as("c"))
-      .groupBy("doc_id")
-      .agg(sum("c").cast("long").as("n_bigrams"), max("c").as("top_bigram_n"),
-        sum(when(col("c") > 1, col("c")).otherwise(0L)).cast("long").as("dup_bigram_n"))
-    ts.join(bgs, "doc_id").select(col("doc_id"), col("n_tokens"), col("n_distinct"),
-      ((col("n_tokens") - col("n_distinct")).cast("double") / col("n_tokens"))
-        .as("dup_token_frac"),
-      (col("top_bigram_n").cast("double") / col("n_bigrams")).as("top_bigram_frac"),
-      (col("dup_bigram_n").cast("double") / col("n_bigrams")).as("dup_bigram_frac"))
-  }
+  def repetitionSignals(docs: DataFrame): DataFrame =
+    textStats(docs, bigrams = true).filter(col("n_bigrams").isNotNull)
+      .select(col("doc_id"), col("n_tokens"), col("n_distinct"), DupTokenFrac,
+        TopBigramFrac, (col("dup_bigram_n").cast("double") / col("n_bigrams"))
+          .as("dup_bigram_frac"))
+
+  private val DupTokenFrac =
+    ((col("n_tokens") - col("n_distinct")).cast("double") / col("n_tokens"))
+      .as("dup_token_frac")
+  private val TopBigramFrac =
+    (col("top_bigram_n").cast("double") / col("n_bigrams")).as("top_bigram_frac")
 
   /** Quality gate: drop documents whose repetition signals exceed the
     * thresholds — and, when `minEntropy` is set, whose token entropy
-    * falls below it (template/spam floor). Returns (kept, removedCount);
-    * the flagged id set is checkpointed lazily, so the removed count's
-    * own job runs the signal subtrees once and `kept` reuses the blocks. */
+    * falls below it (template/spam floor). Returns (kept, removedCount).
+    * Both signals come from one count aggregate ([[textStats]]), and the
+    * flag is one predicate per document (no join, union or distinct). The
+    * flagged id set is checkpointed lazily, so the removed count's own job
+    * runs the signal subtree once and `kept` reuses the blocks. */
   def qualityFilter(docs: DataFrame, maxDupTokenFrac: Double,
       maxTopBigramFrac: Double, minEntropy: Option[Double] = None): (DataFrame, Long) = {
-    val repBad = repetitionSignals(docs)
-      .filter(col("dup_token_frac") > maxDupTokenFrac
-        || col("top_bigram_frac") > maxTopBigramFrac)
+    val signals = withEntropy(textStats(docs, bigrams = true))
+      .select(col("doc_id"), col("n_bigrams"), col("entropy"), DupTokenFrac, TopBigramFrac)
+    // a one-token document has no bigrams and so no repetition signals
+    val repetitive = col("n_bigrams").isNotNull &&
+      (col("dup_token_frac") > maxDupTokenFrac || col("top_bigram_frac") > maxTopBigramFrac)
+    val bad = signals
+      .filter(minEntropy.fold(repetitive)(h => repetitive || col("entropy") < h))
       .select("doc_id")
-    val bad = minEntropy.fold(repBad) { h =>
-      repBad.union(tokenEntropy(docs).filter(col("entropy") < h).select("doc_id"))
-        .distinct()
-    }.localCheckpoint(eager = false)
+      .localCheckpoint(eager = false)
     val kept = docs.join(bad, Seq("doc_id"), "left_anti")
     (kept, bad.count())
   }
@@ -240,58 +259,62 @@ object Corpus {
   /** Contamination report per training document (q_contamination is a
     * straight select over this): distinct-3-shingle overlap with the
     * benchmark source's shingle set. The benchmark side stays a shuffled
-    * equi-join on the shingle key — never forced broadcast. */
+    * equi-join on the shingle key — never forced broadcast.
+    *
+    * One left join of the training shingles to the distinct benchmark
+    * shingles, then per-document counts: n_shingles counts the distinct
+    * (doc, shingle) rows and n_overlap those the benchmark holds. bench
+    * and train are split BEFORE shingling (source is a column of docs,
+    * functionally dependent on doc_id), so no doc_id join is needed. */
   def contaminationScan(docs: DataFrame, benchSource: String,
       flagFrac: Double): DataFrame = {
-    // r13 layout: split bench/train BEFORE shingling — source is a column
-    // of docs, so the pre-split replaces the former post-distinct doc_id
-    // join entirely, and the bench side's distinct runs on `shingle`
-    // alone instead of riding through the (doc_id, shingle) distinct
-    // first. Semantics unchanged (source is functionally dependent on
-    // doc_id), one whole join and one re-distinct cheaper.
-    val bench = TextOps.shingles3(docs.filter(col("source") === benchSource))
-      .select("shingle").distinct()
-    val train = TextOps.shingles3(docs.filter(col("source") =!= benchSource))
-      .distinct()
-      // feeds the size aggregate AND the overlap join; localCheckpoint so
-      // the blocks free with the result frame (cache hygiene, r4)
-      .localCheckpoint()
-    val st = train.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    // hash-PREFIXED sort-merge keys (r13): joining on (xxhash64(shingle),
+    // hash-PREFIXED sort-merge keys: joining on (xxhash64(shingle),
     // shingle) leaves the result identical — the hash is a function of
     // the string, so the pair key matches iff the string key matches —
-    // but the SMJ's sort now resolves almost every comparison on an
-    // 8-byte long instead of a ~25-byte UTF8 compare. Engine-internal
-    // only: nothing hash-derived is published, so oracle parity is
-    // untouched. (This is the classic join-key surrogate trick; at 100 TB
-    // the saving is the sort CPU of both shuffle sides.)
-    val ov = train.withColumn("h", xxhash64(col("shingle")))
-      .join(bench.withColumn("h", xxhash64(col("shingle"))),
-        Seq("h", "shingle"))
+    // but the SMJ's sort resolves almost every comparison on an 8-byte
+    // long instead of a ~25-byte UTF8 compare. Engine-internal only:
+    // nothing hash-derived is published, so oracle parity is untouched.
+    def keyed(d: DataFrame): DataFrame =
+      TextOps.shingles3(d).withColumn("h", xxhash64(col("shingle")))
+    val bench = keyed(docs.filter(col("source") === benchSource))
+      .select("h", "shingle").distinct()
+      .withColumn("hit", lit(true))
+    val perDoc = keyed(docs.filter(col("source") =!= benchSource))
+      .join(bench, Seq("h", "shingle"), "left")
+      // the (doc, shingle) distinct runs on the join's (h, shingle)
+      // clustering — a subset of its key — so it adds no exchange
+      .groupBy("h", "shingle", "doc_id").agg(max("hit").as("hit"))
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_overlap"))
-    val frac = coalesce(col("n_overlap"), lit(0L)).cast("double") / col("n_shingles")
-    st.join(ov, Seq("doc_id"), "left").select(col("doc_id"), col("n_shingles"),
-      coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
+      .agg(count(lit(1)).as("n_shingles"), count(col("hit")).as("n_overlap"))
+    val frac = col("n_overlap").cast("double") / col("n_shingles")
+    perDoc.select(col("doc_id"), col("n_shingles"), col("n_overlap"),
       frac.as("contam_frac"), (frac >= flagFrac).as("flagged"))
   }
 
   /** Contamination gate for a TRAINING corpus: drops the benchmark
     * source's documents entirely (they are eval data — training on them
     * is the failure the gate exists to prevent) and drops training
-    * documents whose overlap fraction exceeds `maxFrac`. Returns
-    * (kept, flaggedTrainingDocs); the flagged set is checkpointed lazily,
-    * so the count's own job materializes it. */
+    * documents whose overlap fraction exceeds `maxFrac`. Returns the kept
+    * frame plus an Observation that counts, as `ContamFlagged`, the
+    * training rows dropped for overlap. The count is observed on the
+    * kept frame's first action (the caller's write), above the join, so
+    * no plan rewrite of either join side can drop it; `get` blocks until
+    * that action has run. */
   def contaminationFilter(docs: DataFrame, benchSource: String,
-      maxFrac: Double): (DataFrame, Long) = {
+      maxFrac: Double): (DataFrame, Observation) = {
     val flagged = contaminationScan(docs, benchSource, flagFrac = maxFrac)
       .filter(col("flagged"))
-      .select("doc_id")
-      .localCheckpoint(eager = false)
+      .select(col("doc_id"), col("flagged").as("_contam"))
+    val obs = Observation()
     val kept = docs.filter(col("source") =!= benchSource)
-      .join(flagged, Seq("doc_id"), "left_anti")
-    (kept, flagged.count())
+      .join(flagged, Seq("doc_id"), "left")
+      .observe(obs, count(col("_contam")).as(ContamFlagged))
+      .filter(col("_contam").isNull).drop("_contam")
+    (kept, obs)
   }
+
+  /** The [[contaminationFilter]] Observation's dropped-row count. */
+  val ContamFlagged = "contam_flagged"
 
   /** Token-budget curation: per language, keep the largest documents while
     * the running whitespace-token total stays within `budget` (ordered

@@ -23,26 +23,25 @@ object Features {
     (close / lag(close, k).over(w)) - lit(1.0)
 
   /** Rolling z-score with min_periods-null and zero-std guards
-    * (feature_calculation_functions.py:16-21). */
-  def rollingZscore(c: Column, w: WindowSpec, n: Int): Column = {
-    val f = w.rowsBetween(-(n - 1), 0)
-    val std = Exact.winStddevSamp(c, f)
-    when(count(c).over(f) >= n, when(std > 0, (c - Exact.winAvg(c, f)) / std))
+    * (feature_calculation_functions.py:16-21) of `c` over its n-row
+    * trailing moments `tag` ([[Exact.withTrailingMoments]]). */
+  def rollingZscore(c: Column, tag: String, n: Int): Column = {
+    val std = Exact.momentsStddevSamp(tag)
+    when(col(s"${tag}_n") >= n, when(std > 0, (c - Exact.momentsAvg(tag)) / std))
   }
 
-  /** Rolling volatility (feature_calculation_functions.py:82-84). */
-  def rollingVol(retCol: Column, w: WindowSpec, n: Int): Column = {
-    val f = w.rowsBetween(-(n - 1), 0)
-    when(count(retCol).over(f) >= n, Exact.winStddevSamp(retCol, f))
-  }
+  /** Rolling volatility (feature_calculation_functions.py:82-84) from the
+    * return column's n-row trailing moments `tag`. */
+  def rollingVol(tag: String, n: Int): Column =
+    when(col(s"${tag}_n") >= n, Exact.momentsStddevSamp(tag))
 
   /** Bollinger bands (population std, TA-Lib convention;
-    * feature_calculation_functions.py:63-70). */
-  def bbands(close: Column, w: WindowSpec, n: Int): (Column, Column, Column) = {
-    val f = w.rowsBetween(-(n - 1), 0)
-    val sma = Exact.winAvg(close, f)
-    val std = Exact.winStddevPop(close, f)
-    val full = count(close).over(f) >= n
+    * feature_calculation_functions.py:63-70) from the close's n-row
+    * trailing moments `tag`. */
+  def bbands(tag: String, n: Int): (Column, Column, Column) = {
+    val sma = Exact.momentsAvg(tag)
+    val std = Exact.momentsStddevPop(tag)
+    val full = col(s"${tag}_n") >= n
     val upper = when(full, sma + (lit(2.0) * std))
     val lower = when(full, sma - (lit(2.0) * std))
     (upper, lower, when(full, (sma + (lit(2.0) * std) - (sma - (lit(2.0) * std))) / sma))
@@ -74,18 +73,24 @@ object Features {
       high: String = "high", low: String = "low"): DataFrame = {
     val w = assetWindow(key, date, tiebreak)
     val c = col(close)
-    val (bbU, bbL, bbW) = bbands(c, w, 20)
-    val withAsset = silver
+    val withRets = silver
       .withColumn("ret_1d", ret(c, 1, w))
       .withColumn("ret_3d", ret(c, 3, w))
       .withColumn("ret_7d", ret(c, 7, w))
       .withColumn("ret_14d", ret(c, 14, w))
       .withColumn("ret_30d", ret(c, 30, w))
-      .withColumn("ret_3d_z", rollingZscore(col("ret_3d"), w, 30))
-      .withColumn("ret_7d_z", rollingZscore(col("ret_7d"), w, 30))
-      .withColumn("vol_z30", rollingZscore(col(volume), w, 30))
-      .withColumn("volatility_30d", rollingVol(col("ret_1d"), w, 30))
+    // trailing moments as prefix-sum differences: O(rows) on the asset
+    // window's one shuffle, where sliding frames re-aggregate per row
+    val moments = Seq((c, 20, "_bb"), (col("ret_3d"), 30, "_r3"),
+      (col("ret_7d"), 30, "_r7"), (col(volume), 30, "_vz"), (col("ret_1d"), 30, "_r1"))
+    val (bbU, bbL, bbW) = bbands("_bb", 20)
+    val withAsset = Exact.withTrailingMoments(withRets, w, moments)
+      .withColumn("ret_3d_z", rollingZscore(col("ret_3d"), "_r3", 30))
+      .withColumn("ret_7d_z", rollingZscore(col("ret_7d"), "_r7", 30))
+      .withColumn("vol_z30", rollingZscore(col(volume), "_vz", 30))
+      .withColumn("volatility_30d", rollingVol("_r1", 30))
       .withColumn("bb_upper", bbU).withColumn("bb_lower", bbL).withColumn("bb_width", bbW)
+      .drop(moments.flatMap { case (_, _, tag) => Seq("_n", "_s", "_q").map(tag + _) }: _*)
     val mom = Recursive.momentum(silver, key, date, close, high, low, tiebreak)
     val withMomentum = withAsset
       .withColumn("_k", col(key).cast("string"))

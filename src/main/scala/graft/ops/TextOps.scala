@@ -228,12 +228,13 @@ object TextOps {
   /** The 4 band keys of a signature frame: (doc_id, band, k1, k2) — the
     * LSH blocking key shared by self-join pairing (minhashPairsFromSig),
     * cross-corpus dedup (q_dedup_incremental) and the streaming ingest's
-    * stream-static candidate join. */
+    * stream-static candidate join. One `stack` generator over one
+    * signature scan: a four-way union of selects would plan the signature
+    * aggregate once per band. */
   def minhashBands(sig: DataFrame): DataFrame =
-    (0 to 3).map { b =>
-      sig.select(col("doc_id"), lit(b).as("band"),
-        col(s"mh${2 * b}").as("k1"), col(s"mh${2 * b + 1}").as("k2"))
-    }.reduce(_ unionByName _)
+    sig.select(col("doc_id"), stack(lit(4) +: (0 to 3).flatMap(b =>
+        Seq(lit(b), col(s"mh${2 * b}"), col(s"mh${2 * b + 1}"))): _*)
+      .as(Seq("band", "k1", "k2")))
 
   /** LSH candidate pairs (doc_a < doc_b, distinct) from a signature frame:
     * 4 bands of 2 minhashes → self-join on the band key. The shuffle key

@@ -206,12 +206,10 @@ object CorpusQueries {
 
   /** Duplicate clustering: connected components over the MinHash-LSH
     * candidate graph; cluster id = min doc_id of the component (its
-    * "keeper"). Spark side is iterative min-label propagation — each round
-    * one join + one min-aggregate, both shuffling on doc_id; rounds =
-    * component diameter (tiny for dup clusters). Convergence is detected
-    * with a single aggregated checksum per round (labels only ever
-    * decrease, so an unchanged sum ⟺ a fixpoint) — no per-row driver
-    * traffic. DuckDB oracle: recursive-CTE transitive closure. */
+    * "keeper"). Spark side is star contraction (ops.Corpus.componentLabels):
+    * each round two windows shuffling on the node key, O(log n) rounds,
+    * stopping at the first star forest with one scalar of driver traffic
+    * per round. DuckDB oracle: recursive-CTE transitive closure. */
   /** Recursive-CTE connected components over the minhash pair graph —
     * shared by the clustering query and keeper selection below. */
   private val ccBody = TextQueries.minhashPairsBody +
@@ -299,13 +297,16 @@ object CorpusQueries {
         .select("doc_id", "lang", "ws_tokens", "score", "cum_tokens")
   }
 
-  /** Implementation lives in ops.Corpus.clusterLabels: localCheckpoint
-    * (eager) rather than persist — it TRUNCATES lineage at the
-    * materialized edge list. With plain persist, round k's plan still
-    * embeds the whole shingle→minhash→band DAG plus 2k join/agg layers —
-    * task binaries and optimizer time grow every round (measured 17 s for
-    * a ≤5-round graph at sf0.1; ~1 s with checkpointed bounded plans). At
-    * cluster scale the same call becomes a reliable checkpoint dir. */
+  /** Implementation lives in ops.Corpus.clusterLabels: each round ends in
+    * a lazy localCheckpoint rather than persist — it TRUNCATES lineage at
+    * the round's adjacency. Lazy does not mean deferred under AQE: the
+    * call still runs every shuffle stage of the plan, and only the last
+    * stage waits for the round's one action (the star-forest test). With
+    * plain persist, round k's plan still embeds the whole
+    * shingle→minhash→band DAG plus every earlier round — task binaries
+    * and optimizer time grow every round (measured 17 s for a ≤5-round
+    * graph at sf0.1; ~1 s with checkpointed bounded plans). At cluster
+    * scale the same call becomes a reliable checkpoint dir. */
   private def clusterFn(s: SparkSession, d: String): DataFrame =
     graft.ops.Corpus.clusterLabels(documents(s, d))
       .select(col("doc_id"), col("cluster"),

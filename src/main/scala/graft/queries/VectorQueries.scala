@@ -2677,9 +2677,9 @@ object VectorQueries {
     * covered, the q_graph_hubness zero-bucket contract — never a row
     * drop).
     *
-    * Scale: Spark side runs ops.Corpus.componentLabels — star-contraction
-    * min-label propagation, O(diameter) rounds of keyed joins, checksum
-    * convergence, no driver per-row traffic (the q_dedup_cluster
+    * Scale: Spark side runs ops.Corpus.componentLabels — star
+    * contraction, O(log n) rounds of node-keyed windows, stopping at the
+    * first star forest, no driver per-row traffic (the q_dedup_cluster
     * machinery applied to a second edge domain — graph-parametric like
     * mutualSql). The oracle replays closure as a recursive CTE over the
     * same inlined mutual edges. */

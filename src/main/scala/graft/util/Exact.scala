@@ -173,6 +173,47 @@ object Exact {
       .drop(cc)
   }
 
+  /** Trailing n-row moments at FULL decimal precision: the O(rows)
+    * prefix-difference layout of [[withRollingMoments]], with values
+    * equal bit for bit to the frame forms [[winSum]], the DSq sum of
+    * squares and the count over `w.rowsBetween(-(n - 1), 0)` — so
+    * [[momentsAvg]]/[[momentsStddevSamp]]/[[momentsStddevPop]] over them
+    * equal [[winAvg]]/[[winStddevSamp]]/[[winStddevPop]].
+    *
+    * The cumulative sums are DECIMAL(37,8)/(37,4), one digit under the
+    * cap: a (37,s) − (37,s) difference types as (38,s), while a
+    * (38,s) − (38,s) one is re-typed to (38,s−1) and loses a digit.
+    * Domain: per-partition cumulative |Σx| < 10^29 and Σx² < 10^33
+    * (past it the cast overflows to null); the precision-18
+    * [[withRollingMoments]] nulls out past 10^10. The price is a
+    * BigDecimal-backed row field per cumulative column.
+    *
+    * Takes every moment at once, `(column, n, tag)`, so the cumulative
+    * sums of all of them are one window pass and their trailing
+    * differences a second (one per moment would chain two passes each).
+    * Adds `{tag}_n`, `{tag}_s`, `{tag}_q` (doubles) per moment; `w` must
+    * be the ordered, frame-less window spec. */
+  def withTrailingMoments(df: org.apache.spark.sql.DataFrame, w: WindowSpec,
+      moments: Seq[(Column, Int, String)]): org.apache.spark.sql.DataFrame = {
+    val wCum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val running = moments.flatMap { case (c, _, tag) => Seq(
+      sum(c.cast(D)).over(wCum).cast(DTrail).as(s"__ts_$tag"),
+      sum((c * c).cast(DSq)).over(wCum).cast(DTrailSq).as(s"__tq_$tag"),
+      count(c).over(wCum).as(s"__tn_$tag"))
+    }
+    def trailing(cum: String, n: Int, zero: Column, out: String): Column =
+      (col(cum) - coalesce(lag(col(cum), n).over(w), zero)).cast("double").as(out)
+    val trailingCols = moments.flatMap { case (_, n, tag) => Seq(
+      trailing(s"__ts_$tag", n, lit(0).cast(DTrail), s"${tag}_s"),
+      trailing(s"__tq_$tag", n, lit(0).cast(DTrailSq), s"${tag}_q"),
+      trailing(s"__tn_$tag", n, lit(0L), s"${tag}_n"))
+    }
+    df.select(col("*") +: running: _*).select(col("*") +: trailingCols: _*)
+      .drop(moments.flatMap { case (_, _, tag) => Seq("ts", "tq", "tn").map(k => s"__${k}_$tag") }: _*)
+  }
+  private val DTrail = DecimalType(37, 8)
+  private val DTrailSq = DecimalType(37, 4)
+
   /** Binary-grid quantization and summation for TRANSCENDENTAL-derived
     * scores — the engine-portable alternative to the decimal detour.
     *

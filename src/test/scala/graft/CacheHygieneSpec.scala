@@ -44,4 +44,16 @@ class CacheHygieneSpec extends SparkSpec {
     assert(remaining == 0,
       s"$remaining persistent RDDs still registered after GC + cleaner drain")
   }
+
+  test("CorpusPipeline.run releases its persisted dedup input when step 2 throws") {
+    val root = java.nio.file.Files.createTempDirectory("graft_hygiene").toString
+    // a file where the silver layer's directory belongs: bronze is
+    // written, then step 2's write of silver/deduped fails
+    assert(new java.io.File(s"$root/silver").createNewFile())
+    intercept[Exception](
+      CorpusPipeline.run(spark, graft.util.Tables.documents(spark, sf), root))
+    assert(new java.io.File(s"$root/bronze/documents").exists())
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "step 2's persisted frame is still in the session CacheManager")
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
 import graft.lake.Lake
@@ -237,5 +238,29 @@ class LakeHandoffSpec extends SparkSpec with Eventually {
     assert(back.schema == StructType(Seq(StructField("k", StringType),
       StructField("v", DoubleType), StructField("arr", ArrayType(LongType)))))
     assert(back.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq == Seq(("z", 2.5)))
+  }
+
+  /** Runs the corpus chain on another thread and fails, instead of
+    * hanging, when it does not finish: `Observation.get` blocks forever
+    * if a plan rewrite drops the node that would fill the Observation. */
+  private def corpusWithin(raw: DataFrame, root: String): CorpusPipeline.Summary =
+    Await.result(Future(CorpusPipeline.run(spark, raw, root))(ExecutionContext.global),
+      scala.concurrent.duration.Duration(5, "min"))
+
+  test("corpus chain: every observed counter completes on an empty corpus") {
+    val root = tmp()
+    val s = corpusWithin(Tables.documents(spark, sf01).limit(0), root)
+    assert(s == CorpusPipeline.Summary(0, 0, 0, 0, 0, 0, 0, 0, 0))
+    recountCorpus(root, s)
+  }
+
+  test("corpus chain: every observed counter completes without benchmark documents") {
+    val root = tmp()
+    val docs = Tables.documents(spark, sf01).filter(col("source") =!= "src0")
+    val s = corpusWithin(docs, root)
+    // the contamination join's benchmark side is empty: nothing is flagged
+    assert(s.bronzeRows == docs.count() && s.removedByContamination == 0L)
+    assert(s.afterNearDup > 0 && s.goldRows > 0)
+    recountCorpus(root, s)
   }
 }

@@ -110,6 +110,15 @@ class PipelinesSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/derivatives/daily").count() == before)
   }
 
+  test("Pipelines.run on an empty raw frame counts 0 everywhere and cuts no snapshot") {
+    val root = tmp()
+    val s = Pipelines.run(spark, cleanBronze().limit(0), mapping, root, universeN = 2)
+    assert(s == Pipelines.Summary(0, 0, 0, 0, 0, derivativesWritten = false))
+    // an empty silver has no latest day: no snap_date=null partition
+    assert(!new java.io.File(s"$root/derivatives/daily/snap_date=null").exists())
+    assert(!new java.io.File(s"$root/derivatives").exists())
+  }
+
   test("Pipelines.run trips the circuit breaker on poisoned input and never writes gold") {
     val root = tmp()
     // 5 poisoned days out of 60 rows ≈ 8.3% > 5% threshold
