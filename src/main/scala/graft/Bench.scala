@@ -1,151 +1,91 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Measure
 
 /** Benchmark main — driver contract: ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
-  *
-  * Each query is materialized through the `noop` sink (full execution of
-  * every operator and row, nothing skipped by count-only pruning, no
-  * driver collect). A warmup pass first: JIT + whole-stage-codegen compile
-  * dominate cold single-query times at small scale and say nothing about
-  * 100 TB throughput — the measured pass reports steady-state.
-  */
+  * Each query runs in full into the `noop` sink. A warmup pass first: JIT
+  * + codegen compile dominate cold single-query times at small scale and
+  * say nothing about steady-state throughput. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.util.Sessions.local()
-    // Bench runs measure, they don't diagnose: hundreds of WindowExec
-    // "No Partition Defined" WARNs (domain-bounded windows, audited in
-    // DESIGN §4) flooded the r13 bench log and buried the summary line
-    // the driver parses. ERROR-only for the measured run.
+    // ERROR-only: hundreds of WindowExec "No Partition Defined" WARNs
+    // (domain-bounded windows, DESIGN §4) buried the summary line.
     spark.sparkContext.setLogLevel("ERROR")
 
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // warmup: compile every plan + JIT the engine once. Only NonFatal
-    // failures are the query's own; a fatal JVM error (OOM, linkage) ends
-    // the run instead of being timed as a "failed" query.
-    names.foreach { n =>
-      try runOne(SparkEntry.queries(n)) catch { case NonFatal(_) => () }
-    }
-    // Executor task-time per query (r15, VERDICT r14 #2): at sf0.1 most
-    // queries are latency-bound, so WALL barely moves between core counts
-    // and the driver's 8-vs-32-core scaling probe reads ~1.0 everywhere.
-    // Summed executor run time is the honest parallelism signal: task-time
-    // divided by wall is the realized core count. Published as an
-    // ADDITIONAL "tasktime" field (same slowest-12 ids as "queries") plus
-    // the full map in BENCH_DETAIL.json — the driver contract's line keys
-    // (metric/value/unit/sf/queries) are untouched. Attribution is
-    // listener-based and async, so a query's last task events can land in
-    // the next query's bucket — noise well under the seconds-scale values
-    // it measures.
-    val metrics = new graft.tools.TaskMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    // only NonFatal failures are the query's own; a fatal JVM error (OOM,
+    // linkage) ends the run instead of being timed as a "failed" query
+    names.foreach(n => try Measure.noop(spark, sfDir, n) catch { case NonFatal(_) => () })
+    // most sf0.1 queries are latency-bound: task-time / wall, the realized
+    // core count, shows what wall cannot. Each measured run has its own
+    // job tag, so its ledger tally is exactly that query's.
+    val ledger = new Measure.Ledger(spark)
     // two measured passes, keep the per-query minimum: a single pass is
-    // hostage to GC pauses / background load; min-of-2 reports the
-    // engine's actual steady-state cost. A failing query must NOT report
-    // its time-to-failure as a cost (a regression that throws early would
-    // silently "improve" the total): failures record -1 and a "failed"
-    // list, and are excluded from the total; each failed id's last cause
-    // goes to BENCH_DETAIL.json.
+    // hostage to GC pauses / background load. A failing query must NOT
+    // report its time-to-failure as a cost (an early throw would "improve"
+    // the total): it records -1, is listed as failed and left out of the
+    // total, and its last cause goes to BENCH_DETAIL.json.
     val causes = scala.collection.mutable.Map.empty[String, String]
-    def pass(): Map[String, (Option[Double], Double)] = names.map { name =>
-      // collect predecessors' garbage OUTSIDE the timed section: after ~100
-      // query executions in one JVM, allocation-heavy queries otherwise pay
-      // earlier queries' GC debt (measured 3-6x inflation late in the suite)
-      System.gc()
-      val rt0 = metrics.runTimeMs
-      val t0 = System.nanoTime()
-      val ok = try { runOne(SparkEntry.queries(name)); true } catch {
-        case NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          causes(name) = e.toString
-          false
+    def tag(pass: Int, name: String) = s"bench-$pass-$name"
+    def pass(p: Int): Map[String, Option[(Double, String)]] = names.map { name =>
+      val s = Measure.run(spark, tag(p, name))(Measure.noop(spark, sfDir, name))
+      s.failure.foreach { e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        causes(name) = e.toString
       }
-      val wall = (System.nanoTime() - t0) / 1e9
-      name -> (if (ok) Some(wall) else None, (metrics.runTimeMs - rt0) / 1e3)
+      name -> (if (s.ok) Some(s.wallS -> tag(p, name)) else None)
     }.toMap
-    val p1 = pass(); val p2 = pass()
-    val results = names.map { n =>
-      n -> (for { a <- p1(n)._1; b <- p2(n)._1 } yield math.min(a, b))
-    }
-    // task-time of the pass that produced the min wall (same steady-state
-    // rationale as min-of-2 itself)
-    val taskTimes: Map[String, Double] = names.map { n =>
-      n -> ((p1(n), p2(n)) match {
-        case ((Some(a), ta), (Some(b), tb)) => if (a <= b) ta else tb
-        case _ => -1.0
-      })
-    }.toMap
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.getOrElse(-1.0) }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, None) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val p1 = pass(1); val p2 = pass(2)
+    ledger.settle()
+    // per id: the min wall and its pass's tag (same steady-state rationale)
+    val best = names.map(n => n -> (for { a <- p1(n); b <- p2(n) } yield Seq(a, b).minBy(_._1)))
+    val results = best.map { case (n, v) => n -> v.map(_._1) }
+    val tallies = best.collect { case (n, Some((_, t))) => n -> ledger.tally(t) }.toMap
+    val byTagMs = names.flatMap(n => Seq(1, 2).map(p => ledger.tally(tag(p, n)).runMs)).sum
+    System.err.println(s"[bench] executor ms: min passes ${tallies.values.map(_.runMs).sum}, " +
+      s"both passes by tag $byTagMs, ledger total ${ledger.total.runMs}")
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.getOrElse(-1.0) }.mkString("{", ",", "}")
+    val failed = results.collect { case (k, None) => "\"" + k + "\"" }.mkString("[", ",", "]")
     val total = results.flatMap(_._2).sum
-    // STDOUT line stays SHORT (r13, VERDICT r12 #1): with 374 registered
-    // queries the full per-query map is a ~15 KB single line, and the
-    // driver harness recorded a mid-JSON truncation (`parsed: null`) in
-    // r12 — so the parseable line carries the summary plus only the
-    // slowest 12 queries; the complete map goes to BENCH_DETAIL.json
-    // (one query per line) and the BENCH_LOCAL.jsonl tee below.
+    // STDOUT line stays SHORT (the driver harness once truncated a ~15 KB
+    // line mid-JSON): the summary plus the slowest 12 queries. The full
+    // map goes to BENCH_DETAIL.json and the BENCH_LOCAL.jsonl tee below.
     val slowPairs = results.collect { case (k, Some(v)) => (k, v) }
       .sortBy(-_._2).take(12)
-    val slow = slowPairs
-      .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // executor task-time for the SAME slowest-12 ids — tasktime/wall is
-    // the realized parallelism the wall-only scaling probe cannot see
+    val slow = slowPairs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val slowTt = slowPairs
-      .map { case (k, _) => "\"" + k + "\":" + taskTimes(k) }.mkString("{", ",", "}")
-    val nFailed = results.count(_._2.isEmpty)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"failed":$failed,"queries":$slow,"tasktime":$slowTt,"detail":"BENCH_DETAIL.json"}"""
+      .map { case (k, _) => "\"" + k + "\":" + tallies(k).runMs / 1e3 }.mkString("{", ",", "}")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":${results.count(_._2.isEmpty)},"failed":$failed,"queries":$slow,"tasktime":$slowTt,"detail":"BENCH_DETAIL.json"}"""
     println(line)
+    // files resolve against the repo root (build-injected property), not
+    // cwd: an sbt launched elsewhere would scatter the versioned record
+    val root = sys.props.getOrElse("graft.repo.root", ".")
     try {
-      val root = sys.props.getOrElse("graft.repo.root", ".")
-      // The stdout line travels through sbt's log machinery where prefixes
-      // and interleaving have twice defeated the driver's parser (r12 mid-
-      // JSON truncation, r13 [info]-prefix burial). The same summary goes
-      // to a BARE file the driver (and the judge) can read unambiguously.
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/BENCH_SUMMARY.json"), line + "\n")
-      val ttDetail = results.map { case (k, _) =>
-        "    \"" + k + "\": " + taskTimes(k)
-      }.mkString("{\n", ",\n", "\n  }")
-      val json = new com.fasterxml.jackson.databind.ObjectMapper()
-      val causeDetail = causes.toSeq.sorted.map { case (k, c) =>
-        "    \"" + k + "\": " + json.writeValueAsString(c)
-      }.mkString("{\n", ",\n", "\n  }")
-      val detail = results.map { case (k, v) =>
-        "  \"" + k + "\": " + v.getOrElse(-1.0)
-      }.mkString(s"""{\n  "at": "${java.time.Instant.now()}",\n  "sf": "$sfDir",\n  "total_s": $total,\n  "failed": $failed,\n  "failure_causes": $causeDetail,\n  "task_time_sec": $ttDetail,\n""", ",\n", "\n}\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$root/BENCH_DETAIL.json"), detail)
+      // sbt's log prefixes and interleaving have defeated the driver's
+      // parser of the stdout line; the same summary goes to a BARE file.
+      Files.writeString(Paths.get(s"$root/BENCH_SUMMARY.json"), line + "\n")
+      def detailMap(kv: Seq[(String, Any)]) =
+        kv.map { case (k, v) => "    \"" + k + "\": " + v }.mkString("{\n", ",\n", "\n  }")
+      // per id from the min-wall pass's tag; -1 for a failed id
+      def perId(missing: Any)(f: Measure.Tally => Any) =
+        detailMap(names.map(n => n -> tallies.get(n).fold(missing)(f)))
+      val causeDetail = detailMap(causes.toSeq.sorted.map { case (k, c) => k -> Verify.q(c) })
+      val detail = results.map { case (k, v) => "  \"" + k + "\": " + v.getOrElse(-1.0) }.mkString(s"""{\n  "at": "${java.time.Instant.now()}",\n  "sf": "$sfDir",\n  "total_s": $total,\n  "failed": $failed,\n  "failure_causes": $causeDetail,\n  "task_time_sec": ${perId(-1.0)(_.runMs / 1e3)},\n  "jobs": ${perId(-1)(_.jobs)},\n  "stages": ${perId(-1)(_.stages)},\n""", ",\n", "\n}\n")
+      Files.writeString(Paths.get(s"$root/BENCH_DETAIL.json"), detail)
     } catch { case NonFatal(e) => System.err.println(s"[bench] detail write failed: $e") }
-    // tee the full per-query record in-repo (append, one line per run):
-    // the driver's bench artifact truncates its tail, which erased the
-    // alphabetically-early half of the suite's timing history for rounds
-    // 1-6 — BENCH_LOCAL.jsonl is the complete, versioned record
+    // append the FULL per-query record: the driver's bench artifact
+    // truncates its tail, so BENCH_LOCAL.jsonl is the complete record
     try {
-      // default tee resolves against the repo root (build-injected
-      // property), not bare cwd: an sbt launched elsewhere would silently
-      // scatter the versioned record into untracked files (ADVICE r7)
-      val tee = sys.env.getOrElse("SPARK_GRAFT_BENCH_TEE",
-        sys.props.get("graft.repo.root")
-          .map(_ + "/BENCH_LOCAL.jsonl").getOrElse("BENCH_LOCAL.jsonl"))
-      if (tee.nonEmpty) {
-        // the tee keeps the FULL per-query map (it's a file, not the
-        // driver's line capture — size is not a constraint here)
-        val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
-        val stamped = full.patch(1, s""""at":"${java.time.Instant.now()}",""", 0)
-        java.nio.file.Files.write(java.nio.file.Paths.get(tee),
-          (stamped + "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      }
+      val full = s"""{"at":"${java.time.Instant.now()}","metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
+      Files.write(Paths.get(s"$root/BENCH_LOCAL.jsonl"), (full + "\n").getBytes("UTF-8"),
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     } catch { case NonFatal(e) => System.err.println(s"[bench] tee failed: $e") }
     spark.stop()
   }

@@ -82,19 +82,20 @@ object Verify {
     if (total > 0 && failed.size == total) sys.exit(1)
   }
 
+  /** JSON string literal, escaping backslash, quote and ALL control chars
+    * (<0x20): a tab or CR in a SQL string would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   private def writeOracleJson(outDir: String): Unit = {
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // one entry PER LINE (r13): 374 oracle SQL strings on a single line
     // is several hundred KB — the same shape of oversized one-liner that
     // truncated the driver's bench capture in r10-r12. json.load treats

@@ -1,43 +1,33 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
-/** Dev utility: time and explain individual registered queries.
-  * `runMain graft.tools.Explain <sfDir> <reps> <id...>` */
+/** `runMain graft.tools.Explain <sfDir> <reps> <id...>`: time and explain
+  * registered queries; a failing id prints `<id> FAILED: <cause>`. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val (confs, ids) = args.drop(2).partition(_.startsWith("--conf="))
     val spark = graft.util.Sessions.local()
-    confs.map(_.stripPrefix("--conf=").split("=", 2)).foreach(kv => spark.conf.set(kv(0), kv(1)))
     println("jvm-args: " + java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.toString)
-    import scala.jdk.CollectionConverters._
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def gcMs: Long = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(_.getCollectionTime).sum
-    ids.foreach { id =>
-      val fn = SparkEntry.queries(id)
-      if (sys.env.contains("GRAFT_EXPLAIN")) fn(spark, sfDir).explain("formatted")
+    args.drop(2).foreach { id =>
+      def run(label: String): Option[Measure.Sample] = {
+        val s = Measure.run(spark, s"explain-$label-$id")(Measure.noop(spark, sfDir, id))
+        s.failure.foreach(e => println(s"$id FAILED: $e"))
+        Some(s).filter(_.ok)
+      }
       // one untimed warmup first (same protocol as Bench): codegen compile
       // + JIT dominate a cold first execution and say nothing about
       // steady-state throughput. Its cost is still printed, not hidden.
-      val w0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      println(f"$id warmup: ${(System.nanoTime() - w0) / 1e9}%.2f s (untimed)")
-      (1 to reps).foreach { i =>
-        // GC outside the timed section (same protocol as Bench): a GC also
-        // triggers Spark's ContextCleaner, releasing accumulated broadcast/
-        // shuffle state from prior reps that otherwise serializes later reps
-        System.gc()
-        val t0 = System.nanoTime(); val c0 = osBean.getProcessCpuTime; val g0 = gcMs
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-        println(f"$id rep$i: $wall%.2f s wall, $cpu%.1f s cpu (${cpu / wall}%.1f cores), ${gcMs - g0} ms gc")
+      // The formatted plan precedes the warmup line (tools/split_plans.py).
+      run("warmup").foreach { w =>
+        if (sys.env.contains("GRAFT_EXPLAIN")) SparkEntry.queries(id)(spark, sfDir).explain("formatted")
+        println(f"$id warmup: ${w.wallS}%.2f s (untimed)")
+        (1 to reps).foreach(i => run(s"rep$i").foreach { r =>
+          println(f"$id rep$i: ${r.wallS}%.2f s wall, ${r.cpuS}%.1f s cpu " +
+            f"(${r.cpuS / r.wallS}%.1f cores), ${r.gcMs} ms gc")
+        })
       }
     }
     spark.stop()

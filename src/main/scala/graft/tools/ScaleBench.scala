@@ -1,31 +1,19 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
 import scala.util.control.NonFatal
 
 import graft.SparkEntry
 
-/** Scaling-cadence runner (VERDICT r7 #8): the sf1 re-measurement
-  * discipline (ScaleUp ×10 fixture, warmup + min-of-reps, wall AND
-  * process CPU) as ONE committed command, so scale claims in DESIGN.md §4
-  * re-measure mechanically as operators evolve instead of by hand.
-  *
-  * `runMain graft.tools.ScaleBench <srcDir> <scaledDir> [ids... | all]`
-  *
-  * - Generates `<scaledDir>` with tools.ScaleUp (×10, decorrelated
-  *   replicas) iff it does not already hold a lineitem.parquet.
-  * - For each query id (default: the scale-audit set below — the
-  *   heaviest registered designs plus every round's new operators), runs
-  *   warmup + 3 reps at BOTH scale factors and reports the minimum wall
-  *   with its CPU.
-  * - Prints the DESIGN.md-style markdown row per query and appends a
-  *   JSON line per run to SCALE_LOCAL.jsonl at the repo root (same
-  *   committed-history rationale as BENCH_LOCAL.jsonl).
-  *
-  * Reading the numbers (DESIGN.md §4): a perfectly LINEAR operator costs
-  * 10× total CPU at 10× rows; wall below 10× is parallelism; CPU far
-  * above ~13× means a super-linear design term — find it before the
-  * corpus does.
-  */
+/** `runMain graft.tools.ScaleBench <srcDir> <scaledDir> [ids... | all]`:
+  * the ×10 scale re-measurement of DESIGN.md §4 as one command. Generates
+  * `<scaledDir>` with ScaleUp ×10 unless it holds a lineitem.parquet; each
+  * id (default: the scale-audit set below) runs warmup + 3 reps at both
+  * scales and prints the min-wall rep's markdown row; the invocation appends
+  * one JSON line, failed ids listed, to SCALE_LOCAL.jsonl at the repo root.
+  * A LINEAR operator costs 10× CPU at 10× rows; wall below 10× is
+  * parallelism; CPU far above ~13× means a super-linear design term. */
 object ScaleBench {
   private val DefaultIds = Seq(
     "q_dedup_semantic", "q_dedup_semantic_hier", "q_ann_ivf_trained",
@@ -34,14 +22,12 @@ object ScaleBench {
     "q_text_entropy", "q_text_unigram_logprob")
 
   def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val dst = args(1)
+    val (src, dst) = (args(0), args(1))
     // `all` = the whole registry (sorted) — the full-suite scaling audit
     val ids =
       if (args.length > 2 && args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 2) args.drop(2).toSeq
       else DefaultIds
-    val reps = 3
 
     if (!new java.io.File(s"$dst/lineitem.parquet").exists()) {
       println(s"[scalebench] generating $dst = ScaleUp x10 of $src")
@@ -49,90 +35,50 @@ object ScaleBench {
     }
 
     val spark = graft.util.Sessions.local()
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    // scale claims cite MEASURED spill: the ledger sums spill and shuffle
+    // bytes per rep's job tag; the row keeps the min-wall rep's values
+    val ledger = new Measure.Ledger(spark)
 
-    // Task-metrics capture (VERDICT r13 #4): scale claims that rest on a
-    // "single-JVM shuffle spill" attribution must cite MEASURED spill.
-    // A SparkListener sums memory/disk spill and shuffle-write bytes per
-    // rep; the row keeps the min-wall rep's values. Listener delivery is
-    // async, so each rep settles briefly before reading the counters.
-    val metrics = new TaskMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-
-    final case class Rep(wall: Double, cpu: Double,
-      spillMemMb: Long, spillDiskMb: Long, shufMb: Long)
-
-    /** min-wall rep under the Bench/Explain protocol: untimed warmup,
-      * System.gc outside the timed section. */
-    def measure(id: String, dir: String): Rep = {
-      val fn = SparkEntry.queries(id)
-      fn(spark, dir).write.format("noop").mode("overwrite").save() // warmup
-      val runs = (1 to reps).map { _ =>
-        System.gc()
-        metrics.reset()
-        val t0 = System.nanoTime(); val c0 = osBean.getProcessCpuTime
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = (osBean.getProcessCpuTime - c0) / 1e9
-        Thread.sleep(300) // let the listener bus drain this rep's TaskEnds
-        Rep(wall, cpu, metrics.memSpillMb, metrics.diskSpillMb, metrics.shufWriteMb)
+    /** Untimed warmup (rep 0), then 3 measured runs of `id` over
+      * `dir`: the min-wall rep with its tally, or the first failure. */
+    def measure(id: String, dir: String, side: String): Either[Throwable, (Measure.Sample, Measure.Tally)] = {
+      val runs = (0 to 3).map(r => s"scale-$side$r-$id")
+        .map(tag => Measure.run(spark, tag)(Measure.noop(spark, dir, id)) -> tag)
+      runs.flatMap(_._1.failure).headOption.toLeft {
+        val (best, tag) = runs.tail.minBy(_._1.wallS)
+        ledger.settle()
+        best -> ledger.tally(tag)
       }
-      runs.minBy(_.wall)
     }
 
+    def mb(bytes: Long): Long = bytes >> 20
     val rows = ids.map { id =>
-      val a = measure(id, src)
-      val b = measure(id, dst)
-      println(f"| $id | ${a.wall}%.2f | ${b.wall}%.2f | ${b.wall / a.wall}%.1f× | " +
-        f"${b.cpu / a.cpu}%.1f× (${a.cpu}%.1f→${b.cpu}%.1f s) | " +
-        f"spill ${a.spillMemMb}→${b.spillMemMb} MB mem, ${a.spillDiskMb}→${b.spillDiskMb} MB disk, " +
-        f"shuffle ${a.shufMb}→${b.shufMb} MB |")
-      (id, a, b)
+      val r = for { a <- measure(id, src, "a"); b <- measure(id, dst, "b") } yield (a, b)
+      r.left.foreach(e => System.err.println(s"[scalebench] $id failed: $e"))
+      r.foreach { case ((a, ta), (b, tb)) =>
+        println(f"| $id | ${a.wallS}%.2f | ${b.wallS}%.2f | ${b.wallS / a.wallS}%.1f× | " +
+          f"${b.cpuS / a.cpuS}%.1f× (${a.cpuS}%.1f→${b.cpuS}%.1f s) | " +
+          f"spill ${mb(ta.memSpill)}→${mb(tb.memSpill)} MB mem, ${mb(ta.diskSpill)}→${mb(tb.diskSpill)} MB disk, " +
+          f"shuffle ${mb(ta.shuffleWrite)}→${mb(tb.shuffleWrite)} MB |")
+      }
+      id -> r
     }
 
-    val stamp = java.time.Instant.now().toString
-    val json = rows.map { case (id, a, b) =>
-      f"""\"$id\":{"sf01_wall":${a.wall}%.3f,"sf01_cpu":${a.cpu}%.2f,""" +
-        f""""sf1_wall":${b.wall}%.3f,"sf1_cpu":${b.cpu}%.2f,""" +
-        f""""sf01_spill_mem_mb":${a.spillMemMb},"sf01_spill_disk_mb":${a.spillDiskMb},"sf01_shuffle_mb":${a.shufMb},""" +
-        f""""sf1_spill_mem_mb":${b.spillMemMb},"sf1_spill_disk_mb":${b.spillDiskMb},"sf1_shuffle_mb":${b.shufMb}}"""
-    }.mkString(s"""{"at":"$stamp","src":"$src","dst":"$dst","queries":{""", ",", "}}")
+    def fields(sf: String, s: Measure.Sample, t: Measure.Tally) =
+      f""""${sf}_wall":${s.wallS}%.3f,"${sf}_cpu":${s.cpuS}%.2f,"${sf}_spill_mem_mb":${mb(t.memSpill)},""" +
+        f""""${sf}_spill_disk_mb":${mb(t.diskSpill)},"${sf}_shuffle_mb":${mb(t.shuffleWrite)}"""
+    val queries = rows.collect { case (id, Right(((a, ta), (b, tb)))) =>
+      s""""$id":{${fields("sf01", a, ta)},${fields("sf1", b, tb)}}"""
+    }.mkString(",")
+    val failed = rows.collect { case (id, Left(_)) => "\"" + id + "\"" }.mkString(",")
+    val json = s"""{"at":"${java.time.Instant.now()}","src":"$src","dst":"$dst",""" +
+      s""""queries":{$queries},"failed":[$failed]}"""
     try {
       val root = sys.props.getOrElse("graft.repo.root", ".")
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/SCALE_LOCAL.jsonl"),
-        (json + "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      Files.write(Paths.get(s"$root/SCALE_LOCAL.jsonl"), (json + "\n").getBytes("UTF-8"),
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
     } catch { case NonFatal(e) => System.err.println(s"[scalebench] tee failed: $e") }
     println(json)
     spark.stop()
-  }
-}
-
-/** Sums spill/shuffle task metrics across all tasks since the last
-  * reset() — public-API SparkListener, works with the UI disabled. */
-final class TaskMetricsListener extends org.apache.spark.scheduler.SparkListener {
-  private val memSpill = new java.util.concurrent.atomic.AtomicLong
-  private val diskSpill = new java.util.concurrent.atomic.AtomicLong
-  private val shufWrite = new java.util.concurrent.atomic.AtomicLong
-  private val runTime = new java.util.concurrent.atomic.AtomicLong
-  def reset(): Unit = { memSpill.set(0); diskSpill.set(0); shufWrite.set(0); runTime.set(0) }
-  def memSpillMb: Long = memSpill.get >> 20
-  def diskSpillMb: Long = diskSpill.get >> 20
-  def shufWriteMb: Long = shufWrite.get >> 20
-  /** Summed executor task run time (ms) — the core-scaling signal Bench
-    * publishes beside wall (r15, VERDICT r14 #2): wall can be flat across
-    * core counts when a query is latency-bound, but task-time per wall
-    * second IS the realized parallelism. */
-  def runTimeMs: Long = runTime.get
-  override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-    val m = t.taskMetrics
-    if (m != null) {
-      memSpill.addAndGet(m.memoryBytesSpilled)
-      diskSpill.addAndGet(m.diskBytesSpilled)
-      shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      runTime.addAndGet(m.executorRunTime)
-    }
   }
 }

@@ -51,7 +51,7 @@ CATEGORIES = {
     "env-var": re.compile(r"""(?:sys\.env|getenv|environ)[^\n]*?["']([A-Z][A-Z0-9_]{2,})["']"""),
 }
 ALLOWED_ENV = {
-    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_TEE", "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_VERIFY_PAR",
     "SPARK_DRIVER_MEM", "GRAFT_EXPLAIN", "COURSIER_MODE", "PATH", "HOME", "UTF",
 }
